@@ -1,12 +1,11 @@
 package graft.run
 
+import graft.functions.CountHistogram
 import graft.model.SchemaParser
-import graft.row.RowValidator
 import graft.snapshot.{AppendSnapshotStore, ManifestStore}
 import graft.table.TableChecks
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types._
 import org.apache.hadoop.fs.Path
 
@@ -43,9 +42,10 @@ final case class IncrementalResult(
   *    (`hll_union_agg`, [[graft.functions.TDigestMergeAgg]]): O(runs ×
   *    partitions) rows, manifest-sized.
   *  - drift: recomputed from a persisted SUFFICIENT-STATISTICS sidecar —
-  *    per-(partition, value) counts appended per run (domain-bounded, the
-  *    same reduction [[ValidationPipeline]] applies before its windows) —
-  *    so the KS/chi²/PSI inputs are exact merged counts with no raw scan.
+  *    per-(partition, value) counts appended per run (domain-bounded), folded
+  *    into one histogram per partition and fed to the same kernel as
+  *    [[ValidationPipeline]] ([[Drift]]) — so the KS/chi²/PSI inputs are
+  *    exact merged counts with no raw scan.
   *
   * The reference validates one instance at a time and has no notion of
   * incremental state; this is the snapshot-checkpoint generalization the
@@ -103,42 +103,10 @@ object IncrementalValidation {
 
     // ---- fused delta scan → narrow digest (same shape as ValidationPipeline:
     // payload read once; invalid rows carry the full row for phase-2) ----
-    val scalarCols: Seq[String] =
-      (Seq(cfg.partCol, cfg.idCol) ++ cfg.uniqueKey ++ cfg.riKey ++
-        cfg.statsCols ++ cfg.quantileCol ++ cfg.driftNumCol ++ cfg.driftCatCol ++
-        cfg.expectations.flatMap(graft.table.Expectations.columnOf))
-        .distinct.filter(delta.columns.contains)
-    val rowStruct = struct(delta.columns.toIndexedSeq.map(col): _*)
-    val valid = RowValidator.validity(delta, doc)
-    val withRi: DataFrame = (cfg.riKey, dim) match {
-      case (Some(k), Some(d)) =>
-        val keys = d.select(col(d.columns.head).as(k)).distinct()
-          .withColumn("_ri_hit", lit(true))
-        delta.join(broadcast(keys), Seq(k), "left_outer")
-      case _ => delta.withColumn("_ri_hit", lit(true))
-    }
-    val digest = withRi.select(
-      scalarCols.map(col) ++ Seq(
-        spark_partition_id().as("_pid"),
-        coalesce(col("_ri_hit"), lit(false)).as("_ri_ok"),
-        when(!valid, rowStruct).as("_row")): _*)
+    val digest = ValidationPipeline.digestOf(delta, dim, cfg, doc)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 
     // ---- delta violations: row-level + RI + uniqueness ----
-    val rowViol = RowValidator.violationsFromPayload(digest, doc, "_row", "_pid",
-        cfg.idCol, extraCols = Seq(cfg.partCol))
-      .select(part, col(cfg.idCol).cast(StringType).as("doc_id"),
-        col("keyword"), col("keywordLocation"), col("instanceLocation"), col("message"))
-
-    val riViol: Option[DataFrame] = for { k <- cfg.riKey; _ <- dim } yield
-      digest.filter(!col("_ri_ok"))
-        .select(part, col(cfg.idCol).cast(StringType).as("doc_id"),
-          lit("referential").as("keyword"),
-          lit(s"#/$$dataset/referential/$k").as("keywordLocation"),
-          concat(lit(s"#/$k="), coalesce(col(k), lit("null"))).as("instanceLocation"),
-          concat(lit(s"value of $k not in dimension: "), coalesce(col(k), lit("null")))
-            .as("message"))
-
     val uniqViol: Option[DataFrame] = cfg.uniqueKey.map { k =>
       val inDelta = TableChecks.duplicatesSalted(
           digest.filter(col(k).isNotNull), k, cfg.saltBuckets)
@@ -166,7 +134,8 @@ object IncrementalValidation {
           col("_why").as("message"))
     }
 
-    val violations = (Seq(rowViol) ++ riViol.toSeq ++ uniqViol.toSeq)
+    val violations = (ValidationPipeline.rowAndRiViolations(digest, dim, cfg, doc) ++
+        uniqViol.toSeq)
       .reduce(_ unionByName _)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 
@@ -307,91 +276,22 @@ object IncrementalValidation {
         .drop(s"tdq_$qc")
     }
 
-    // ---- drift from merged sufficient statistics ----
-    val dist = if (state.hasDist) Some(state.readDist()
-      .groupBy("partition_key", "column", "v_num", "k_cat")
-      .agg(sum("cnt").as("cnt"))) else None
-
-    val ksByPart: Option[DataFrame] = for {
-      c <- cfg.driftNumCol; b <- baseline; d <- dist
-    } yield {
-      val curCnt = d.filter(col("column") === c)
-        .select(col("partition_key"), col("v_num").as("v"), col("cnt").as("ca"))
-      val base = b.groupBy(col(c).cast(DoubleType).as("v"))
-        .agg(count(lit(1)).as("cb"))
-      val dom = curCnt.select("v").union(base.select("v")).distinct()
-      val parts = curCnt.select("partition_key").distinct()
-      val grid = parts.crossJoin(broadcast(dom))
-      val domain = grid
-        .join(curCnt, Seq("partition_key", "v"), "left_outer")
-        .join(broadcast(base), Seq("v"), "left_outer")
-        .na.fill(0L, Seq("ca", "cb"))
-      val w = Window.partitionBy(col("partition_key")).orderBy("v")
-        .rowsBetween(Window.unboundedPreceding, 0)
-      val na = sum("ca").over(Window.partitionBy(col("partition_key")))
-      val nb = sum("cb").over(Window.partitionBy(col("partition_key")))
-      domain
-        .withColumn("cdf_a", sum("ca").over(w) / na)
-        .withColumn("cdf_b", sum("cb").over(w) / nb)
-        .groupBy("partition_key").agg(max(abs(col("cdf_a") - col("cdf_b"))).as("ks_stat"))
+    // ---- drift from merged sufficient statistics: one histogram per
+    // partition and drift column, folded from the per-run counts ----
+    for (b <- baseline if state.hasDist) {
+      val hists = cfg.driftNumCol.toSeq.map(c =>
+        CountHistogram(col("v_num"), when(col("column") === c, col("cnt"))).as(Drift.NumHist)) ++
+        cfg.driftCatCol.toSeq.map(c =>
+          CountHistogram(col("k_cat"), when(col("column") === c, col("cnt"))).as(Drift.CatHist))
+      if (hists.nonEmpty) m = Drift.withMetrics(m.join(state.readDist().groupBy("partition_key")
+        .agg(hists.head, hists.tail: _*), Seq("partition_key"), "left_outer"), b, cfg)
     }
 
-    val chi2ByPart: Option[DataFrame] = for {
-      c <- cfg.driftCatCol; b <- baseline; d <- dist
-    } yield {
-      val o = d.filter(col("column") === c)
-        .select(col("partition_key"), col("k_cat").as("k"), col("cnt").as("o"))
-      val e = b.groupBy(col(c).cast(StringType).as("k")).agg(count(lit(1)).as("eRaw"))
-      val eTot = e.agg(sum("eRaw")).collect()(0).getLong(0).toDouble
-      val grid = o.select("partition_key").distinct().crossJoin(broadcast(e))
-      val joined = grid.join(o, Seq("partition_key", "k"), "full_outer")
-        .na.fill(0L, Seq("o", "eRaw"))
-      val oTot = sum("o").over(Window.partitionBy(col("partition_key")))
-      val p = greatest(col("o").cast(DoubleType) / oTot, lit(1e-6))
-      val q = greatest(col("eRaw").cast(DoubleType) / eTot, lit(1e-6))
-      joined
-        .withColumn("e", (when(col("eRaw") === 0L, 0.5)
-          .otherwise(col("eRaw").cast(DoubleType)) / eTot) * oTot)
-        .withColumn("psi_term", (p - q) * log(p / q))
-        .groupBy("partition_key")
-        .agg(sum(pow(col("o") - col("e"), 2) / col("e")).as("chi2_stat"),
-          sum(col("psi_term")).as("psi_stat"),
-          count(lit(1)).as("chi2_categories"))
-    }
-
-    ksByPart.foreach(k => m = m.join(k, Seq("partition_key"), "left_outer"))
-    chi2ByPart.foreach(c => m = m.join(c, Seq("partition_key"), "left_outer"))
-
-    val metricCols = m.columns.filterNot(c =>
-      c == "partition_key" || c == "row_count" || c == "violation_count")
-    val chi2P = if (m.columns.contains("chi2_stat"))
-      udf((stat: java.lang.Double, k: java.lang.Long) =>
-        if (stat == null || k == null) null
-        else java.lang.Double.valueOf(graft.table.GammaMath
-          .regularizedGammaQ(math.max(1L, k - 1) / 2.0, stat / 2.0)))
-        .apply(col("chi2_stat"), col("chi2_categories"))
-    else lit(null).cast(DoubleType)
-
-    val verdict: Column = {
-      var v = col("violation_count") === 0L
-      if (m.columns.contains("ks_stat"))
-        v = v && coalesce(col("ks_stat") <= cfg.ksThreshold, lit(true))
-      if (m.columns.contains("chi2_stat"))
-        v = v && coalesce(col("chi2_p") >= cfg.chi2PMin, lit(true))
-      if (m.columns.contains("expectations_failed"))
-        v = v && col("expectations_failed") === 0L
-      v
-    }
-
-    m.withColumn("chi2_p", chi2P)
+    ValidationPipeline.withVerdict(m, "partition_key", cfg)
       .withColumn("run_id", lit(runId))
       .withColumn("input_fingerprint",
         concat(lit("snap="), lit(snapshotId).cast(StringType), lit("/part="),
           col("partition_key"), lit("/rows="), col("row_count").cast(StringType)))
-      .withColumn("verdict", verdict)
-      .withColumn("metrics", map_from_arrays(
-        array((metricCols :+ "chi2_p").toIndexedSeq.map(lit): _*),
-        array((metricCols :+ "chi2_p").toIndexedSeq.map(c => col(c).cast(DoubleType)): _*)))
       .withColumn("status", lit("completed"))
       .withColumn("snapshot_id", lit(snapshotId))
       .withColumn("committed_at", current_timestamp())
@@ -435,7 +335,6 @@ object IncrementalValidation {
       if (!fs(root).exists(root)) Seq.empty
       else fs(root).listStatus(root).toSeq.map(_.getPath.getName)
         .filter(_.startsWith("batch="))
-    private def isEmpty(root: Path): Boolean = batchNames(root).isEmpty
     private def readAll(root: Path): DataFrame = {
       // explicit committed-batch paths, not a glob: globs trip Spark's
       // FileStreamSink metadata probe into logging spurious
@@ -494,8 +393,7 @@ object IncrementalValidation {
 
     def appendState(rows: DataFrame, snapId: Long): Unit = append(stateDir, rows, snapId)
     def appendDist(rows: DataFrame, snapId: Long): Unit = append(distDir, rows, snapId)
-    def hasState: Boolean = !isEmpty(stateDir)
-    def hasDist: Boolean = !isEmpty(distDir)
+    def hasDist: Boolean = batchNames(distDir).nonEmpty
     def readState(): DataFrame = readAll(stateDir)
     def readDist(): DataFrame = readAll(distDir)
     def lastValidatedSnapshot: Long =

@@ -1,12 +1,12 @@
 package graft.run
 
+import graft.functions.CountHistogram
 import graft.model.{SchemaDoc, SchemaParser}
 import graft.row.RowValidator
 import graft.snapshot.ManifestStore
 import graft.table.TableChecks
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types._
 
 /** Pipeline configuration — which checks run and their thresholds.
@@ -91,9 +91,13 @@ final case class PipelineResult(violations: DataFrame, manifest: DataFrame)
   *     (key, salt) partial counts, then per-key re-aggregation — so a
   *     pathological hot key splits across `saltBuckets` reducers first.
   *     Offending keys (rare) broadcast back to attribute rows to partitions.
-  *  5. Drift reduces each side to its value domain (≤ vocab/len-bound rows)
-  *     BEFORE any window: per-partition KS windows only ever see
-  *     |domain| rows, never raw data.
+  *  5. Drift rides step 3: each partition's value histograms of the drift
+  *     columns ([[graft.functions.CountHistogram]], state bounded by the
+  *     value domain) are two more aggregates of the same hash aggregation.
+  *     The baseline reduces to the same histograms in one pass and one
+  *     `collect()`, and one kernel ([[Drift]]) turns each manifest row's
+  *     (partition, baseline) histogram pair into KS, chi² and PSI — no
+  *     grid, window or join.
   *  6. Resume: input partitions anti-join completed manifest rows — a driver
   *     metadata operation (partition list is small), so a restarted run
   *     re-reads only pending partitions' files.
@@ -107,7 +111,13 @@ object ValidationPipeline {
     * the RI check; `baseline` the prior-snapshot table for drift. */
   def run(spark: SparkSession, facts: DataFrame, dim: Option[DataFrame],
           baseline: Option[DataFrame], cfg: PipelineConfig,
-          runId: String, manifest: Option[ManifestStore] = None): PipelineResult = {
+          runId: String, manifest: Option[ManifestStore] = None): PipelineResult =
+    build(spark, facts, dim, baseline, cfg, runId, manifest)._1
+
+  /** [[run]], plus the digest it may have persisted. */
+  private def build(spark: SparkSession, facts: DataFrame, dim: Option[DataFrame],
+                    baseline: Option[DataFrame], cfg: PipelineConfig, runId: String,
+                    manifest: Option[ManifestStore]): (PipelineResult, DataFrame) = {
 
     val doc: SchemaDoc = SchemaParser.parse(cfg.schemaJson)
     val part = col(cfg.partCol)
@@ -132,51 +142,14 @@ object ValidationPipeline {
     // Scalar columns + flags always ride; only the rare invalid rows carry
     // the full original row (for phase-2 violation construction), so the
     // digest is a few % of the input bytes at production violation rates.
-    val scalarCols: Seq[String] =
-      (Seq(cfg.partCol, cfg.idCol) ++ cfg.uniqueKey ++ cfg.riKey ++
-        cfg.statsCols ++ cfg.quantileCol ++ cfg.driftNumCol ++ cfg.driftCatCol ++
-        cfg.expectations.flatMap(graft.table.Expectations.columnOf))
-        .distinct.filter(pending.columns.contains)
-    val rowStruct = struct(pending.columns.toIndexedSeq.map(col): _*)
-    val valid = RowValidator.validity(pending, doc)
-    // RI membership probes IN the scan: broadcast left-outer against the
-    // (distinct-ed, tiny) dimension key set — null/unknown keys flag false,
-    // matching the left-anti formulation of TableChecks.referentialViolations
-    val withRi: DataFrame = (cfg.riKey, dim) match {
-      case (Some(k), Some(d)) =>
-        val keys = d.select(col(d.columns.head).as(k)).distinct()
-          .withColumn("_ri_hit", lit(true))
-        pending.join(broadcast(keys), Seq(k), "left_outer")
-      case _ => pending.withColumn("_ri_hit", lit(true))
-    }
-    val digest0 = withRi.select(
-      scalarCols.map(col) ++ Seq(
-        spark_partition_id().as("_pid"),
-        coalesce(col("_ri_hit"), lit(false)).as("_ri_ok"),
-        when(!valid, rowStruct).as("_row")): _*)
+    val digest0 = digestOf(pending, dim, cfg, doc)
     val digest =
       if (cfg.persistDigest)
         digest0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       else digest0
 
-    // ---------------- 2. row-level constraint violations ----------------
-    // two-phase: the scan evaluated only the codegen'd validity predicate;
-    // violation construction (CodegenFallback HOFs) runs here, over only the
-    // digest's invalid payloads (RowValidator.violationsFromPayload)
-    val rowViol = RowValidator.violationsFromPayload(digest, doc, "_row", "_pid",
-        cfg.idCol, extraCols = Seq(cfg.partCol))
-      .select(part, col(cfg.idCol).cast(StringType).as("doc_id"),
-        col("keyword"), col("keywordLocation"), col("instanceLocation"), col("message"))
-
-    // ---------------- 3. referential integrity (digest flag) ----------------
-    val riViol: Option[DataFrame] = for { k <- cfg.riKey; _ <- dim } yield
-      digest.filter(!col("_ri_ok"))
-        .select(part, col(cfg.idCol).cast(StringType).as("doc_id"),
-          lit("referential").as("keyword"),
-          lit(s"#/$$dataset/referential/$k").as("keywordLocation"),
-          concat(lit(s"#/$k="), coalesce(col(k), lit("null"))).as("instanceLocation"),
-          concat(lit(s"value of $k not in dimension: "), coalesce(col(k), lit("null")))
-            .as("message"))
+    // ---------------- 2-3. row-level and referential violations ----------------
+    val rowAndRi = rowAndRiViolations(digest, dim, cfg, doc)
 
     // ---------------- 4. uniqueness (salted two-phase + broadcast-back) ----------------
     val uniqViol: Option[DataFrame] = cfg.uniqueKey.map { k =>
@@ -197,7 +170,7 @@ object ValidationPipeline {
     // per-partition verdict counts — without this the whole constraint-eval
     // DAG runs twice. Violations are ≤ violation-rate × rows (small), so
     // MEMORY_AND_DISK is safe at any input scale.
-    val violations = (Seq(rowViol) ++ riViol.toSeq ++ uniqViol.toSeq)
+    val violations = (rowAndRi ++ uniqViol.toSeq)
       .reduce(_ unionByName _)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 
@@ -217,6 +190,10 @@ object ValidationPipeline {
     } ++ expLowered.zipWithIndex.map { case ((c, _, _), i) =>
       // expectation observations ride the SAME per-partition aggregation
       c.as(s"_exp$i")
+    } ++ baseline.toSeq.flatMap { _ =>
+      // so do the drift histograms ([[Drift]]): one per drift column
+      cfg.driftNumCol.map(c => CountHistogram(col(c).cast(DoubleType)).as(Drift.NumHist)) ++
+        cfg.driftCatCol.map(c => CountHistogram(col(c).cast(StringType)).as(Drift.CatHist))
     }
     val stats0 = digest.groupBy(part)
       .agg(count(lit(1)).as("row_count"), statAggs: _*)
@@ -228,72 +205,13 @@ object ValidationPipeline {
         .drop(s"_tdq_$qc")
     }
 
-    // ---------------- 6. drift vs baseline (domain-sized windows) ----------------
-    // KS on the numeric column: per-partition empirical CDF vs the GLOBAL
-    // baseline CDF. Both sides reduce to per-value counts first.
-    val ksByPart: Option[DataFrame] = for { c <- cfg.driftNumCol; b <- baseline } yield {
-      val cur = digest.groupBy(part, col(c).cast(DoubleType).as("v"))
-        .agg(count(lit(1)).as("ca"))
-      val base = b.groupBy(col(c).cast(DoubleType).as("v"))
-        .agg(count(lit(1)).as("cb"))
-      // Every partition's CDF must step at every value of the MERGED domain
-      // (a baseline value absent from one partition still moves cdf_b there),
-      // so build the parts × domain grid — both sides are post-aggregation
-      // and domain-bounded (n_tok ≤ maxItems), never raw rows.
-      val dom = cur.select("v").union(base.select("v")).distinct()
-      val parts = cur.select(part).distinct()
-      val grid = parts.crossJoin(broadcast(dom))
-      val domain = grid
-        .join(cur, Seq(cfg.partCol, "v"), "left_outer")
-        .join(broadcast(base), Seq("v"), "left_outer")
-        .na.fill(0L, Seq("ca", "cb"))
-      val w = Window.partitionBy(part).orderBy("v")
-        .rowsBetween(Window.unboundedPreceding, 0)
-      val na = sum("ca").over(Window.partitionBy(part))
-      val nb = sum("cb").over(Window.partitionBy(part))
-      domain
-        .withColumn("cdf_a", sum("ca").over(w) / na)
-        .withColumn("cdf_b", sum("cb").over(w) / nb)
-        .groupBy(part).agg(max(abs(col("cdf_a") - col("cdf_b"))).as("ks_stat"))
-    }
-
-    // chi-squared on the categorical column per partition vs baseline freqs.
-    val chi2ByPart: Option[DataFrame] = for { c <- cfg.driftCatCol; b <- baseline } yield {
-      val o = digest.groupBy(part, col(c).as("k")).agg(count(lit(1)).as("o"))
-      val e = b.groupBy(col(c).as("k")).agg(count(lit(1)).as("eRaw"))
-      val eTot = e.agg(sum("eRaw")).collect()(0).getLong(0).toDouble
-      // partitions × baseline-category grid (like the KS domain grid): a
-      // category present in the baseline but ABSENT from a partition must
-      // still contribute (0 − e)²/e = e to that partition's statistic;
-      // observed-only categories enter via the full-outer with e = 0 → the
-      // 0.5 pseudo-count below.
-      val grid = o.select(part).distinct().crossJoin(broadcast(e))
-      val joined = grid.join(o, Seq(cfg.partCol, "k"), "full_outer")
-        .na.fill(0L, Seq("o", "eRaw"))
-      val oTot = sum("o").over(Window.partitionBy(part))
-      // PSI per partition rides the SAME grid and aggregation (zero extra
-      // scans): p/q eps-floored exactly like TableChecks.psiDrift. Reported
-      // as a metric; the verdict gate stays on the chi² p-value.
-      val p = greatest(col("o").cast(DoubleType) / oTot, lit(1e-6))
-      val q = greatest(col("eRaw").cast(DoubleType) / eTot, lit(1e-6))
-      joined
-        .withColumn("e", (when(col("eRaw") === 0L, 0.5)
-          .otherwise(col("eRaw").cast(DoubleType)) / eTot) * oTot)
-        .withColumn("psi_term", (p - q) * log(p / q))
-        .groupBy(part)
-        .agg(sum(pow(col("o") - col("e"), 2) / col("e")).as("chi2_stat"),
-             sum(col("psi_term")).as("psi_stat"),
-             count(lit(1)).as("chi2_categories"))
-    }
-
-    // ---------------- 7. verdicts + manifest ----------------
+    // ---------------- 6. verdicts + manifest ----------------
     val violByPart = violations.groupBy(part)
       .agg(count(lit(1)).as("violation_count"))
 
     var m = stats.join(violByPart, Seq(cfg.partCol), "left_outer")
       .na.fill(0L, Seq("violation_count"))
-    ksByPart.foreach(k => m = m.join(k, Seq(cfg.partCol), "left_outer"))
-    chi2ByPart.foreach(c => m = m.join(c, Seq(cfg.partCol), "left_outer"))
+    baseline.foreach(b => m = Drift.withMetrics(m, b, cfg))
 
     // per-partition expectation verdicts from the observations that rode the
     // stats aggregation: failed = observed null or outside [lo, hi]
@@ -306,15 +224,84 @@ object ValidationPipeline {
         .drop(expLowered.indices.map(i => s"_exp$i"): _*)
     }
 
-    val metricCols = m.columns.filterNot(c =>
-      c == cfg.partCol || c == "row_count" || c == "violation_count")
-    val chi2P = if (m.columns.contains("chi2_stat"))
-      udf((stat: java.lang.Double, k: java.lang.Long) =>
-        if (stat == null || k == null) null
-        else java.lang.Double.valueOf(graft.table.GammaMath
-          .regularizedGammaQ(math.max(1L, k - 1) / 2.0, stat / 2.0)))
-        .apply(col("chi2_stat"), col("chi2_categories"))
-    else lit(null).cast(DoubleType)
+    val manifestRows = withVerdict(m, cfg.partCol, cfg)
+      .withColumn("run_id", lit(runId))
+      .withColumn("partition_key", part.cast(StringType))
+      .withColumn("input_fingerprint",
+        concat(lit("part="), part.cast(StringType), lit("/rows="),
+          col("row_count").cast(StringType)))
+      .withColumn("status", lit("completed"))
+      .withColumn("committed_at", current_timestamp())
+      .select("run_id", "partition_key", "input_fingerprint", "row_count",
+        "violation_count", "verdict", "metrics", "status", "committed_at")
+
+    (PipelineResult(violations, manifestRows), digest)
+  }
+
+  /** Step 1, the fused scan of `rows` into the narrow digest (unpersisted):
+    * the scalar columns every check family reads, the scan partition id, the
+    * RI membership flag `_ri_ok`, and the full row `_row` of invalid rows
+    * only. */
+  private[run] def digestOf(rows: DataFrame, dim: Option[DataFrame], cfg: PipelineConfig,
+                            doc: SchemaDoc): DataFrame = {
+    val scalarCols: Seq[String] =
+      (Seq(cfg.partCol, cfg.idCol) ++ cfg.uniqueKey ++ cfg.riKey ++
+        cfg.statsCols ++ cfg.quantileCol ++ cfg.driftNumCol ++ cfg.driftCatCol ++
+        cfg.expectations.flatMap(graft.table.Expectations.columnOf))
+        .distinct.filter(rows.columns.contains)
+    val rowStruct = struct(rows.columns.toIndexedSeq.map(col): _*)
+    val valid = RowValidator.validity(rows, doc)
+    // RI membership probes IN the scan: broadcast left-outer against the
+    // (distinct-ed, tiny) dimension key set — null/unknown keys flag false,
+    // matching the left-anti formulation of TableChecks.referentialViolations
+    val withRi: DataFrame = (cfg.riKey, dim) match {
+      case (Some(k), Some(d)) =>
+        val keys = d.select(col(d.columns.head).as(k)).distinct()
+          .withColumn("_ri_hit", lit(true))
+        rows.join(broadcast(keys), Seq(k), "left_outer")
+      case _ => rows.withColumn("_ri_hit", lit(true))
+    }
+    withRi.select(
+      scalarCols.map(col) ++ Seq(
+        spark_partition_id().as("_pid"),
+        coalesce(col("_ri_hit"), lit(false)).as("_ri_ok"),
+        when(!valid, rowStruct).as("_row")): _*)
+  }
+
+  /** Steps 2 and 3 over a digest: row-level violations, then (with a
+    * dimension) referential ones. */
+  private[run] def rowAndRiViolations(digest: DataFrame, dim: Option[DataFrame],
+                                      cfg: PipelineConfig, doc: SchemaDoc): Seq[DataFrame] = {
+    // ---------------- 2. row-level constraint violations ----------------
+    // two-phase: the scan evaluated only the codegen'd validity predicate;
+    // violation construction (CodegenFallback HOFs) runs here, over only the
+    // digest's invalid payloads (RowValidator.violationsFromPayload)
+    val part = col(cfg.partCol)
+    val rowViol = RowValidator.violationsFromPayload(digest, doc, "_row", "_pid",
+        cfg.idCol, extraCols = Seq(cfg.partCol))
+      .select(part, col(cfg.idCol).cast(StringType).as("doc_id"),
+        col("keyword"), col("keywordLocation"), col("instanceLocation"), col("message"))
+
+    // ---------------- 3. referential integrity (digest flag) ----------------
+    val riViol: Option[DataFrame] = for { k <- cfg.riKey; _ <- dim } yield
+      digest.filter(!col("_ri_ok"))
+        .select(part, col(cfg.idCol).cast(StringType).as("doc_id"),
+          lit("referential").as("keyword"),
+          lit(s"#/$$dataset/referential/$k").as("keywordLocation"),
+          concat(lit(s"#/$k="), coalesce(col(k), lit("null"))).as("instanceLocation"),
+          concat(lit(s"value of $k not in dimension: "), coalesce(col(k), lit("null")))
+            .as("message"))
+    rowViol +: riViol.toSeq
+  }
+
+  /** Adds `verdict` and the `metrics` map (every column of `m` but
+    * `keyCol`, `row_count` and `violation_count`, with `chi2_p` last and null
+    * when not measured) to a per-partition manifest. The verdict: no
+    * violations, drift within its thresholds where measured, every
+    * expectation held. */
+  private[run] def withVerdict(m: DataFrame, keyCol: String, cfg: PipelineConfig): DataFrame = {
+    val metricCols = m.columns.filterNot(Set(keyCol, "row_count", "violation_count", "chi2_p"))
+      .toIndexedSeq :+ "chi2_p"
 
     val verdict: Column = {
       var v = col("violation_count") === 0L
@@ -327,32 +314,21 @@ object ValidationPipeline {
       v
     }
 
-    val manifestRows = m
-      .withColumn("chi2_p", chi2P)
-      .withColumn("run_id", lit(runId))
-      .withColumn("partition_key", part.cast(StringType))
-      .withColumn("input_fingerprint",
-        concat(lit("part="), part.cast(StringType), lit("/rows="),
-          col("row_count").cast(StringType)))
+    (if (m.columns.contains("chi2_p")) m else m.withColumn("chi2_p", lit(null).cast(DoubleType)))
       .withColumn("verdict", verdict)
-      .withColumn("metrics", map_from_arrays(
-        array((metricCols :+ "chi2_p").toIndexedSeq.map(lit): _*),
-        array((metricCols :+ "chi2_p").toIndexedSeq.map(c => col(c).cast(DoubleType)): _*)))
-      .withColumn("status", lit("completed"))
-      .withColumn("committed_at", current_timestamp())
-      .select("run_id", "partition_key", "input_fingerprint", "row_count",
-        "violation_count", "verdict", "metrics", "status", "committed_at")
-
-    PipelineResult(violations, manifestRows)
+      .withColumn("metrics", map_from_arrays(array(metricCols.map(lit): _*),
+        array(metricCols.map(c => col(c).cast(DoubleType)): _*)))
   }
 
   /** Run + persist: violations parquet (partitioned by the partition column)
-    * and manifest append — the checkpoint commit. */
+    * and manifest append — the checkpoint commit. The digest and violation
+    * caches are released once committed; the returned manifest is the
+    * committed batch, read back from its files. */
   def runAndCommit(spark: SparkSession, facts: DataFrame, dim: Option[DataFrame],
                    baseline: Option[DataFrame], cfg: PipelineConfig, runId: String,
                    outDir: String): PipelineResult = {
     val store = new ManifestStore(spark, outDir)
-    val r = run(spark, facts, dim, baseline, cfg, runId, Some(store))
+    val (r, digest) = build(spark, facts, dim, baseline, cfg, runId, Some(store))
     // dynamic partition overwrite: a crash between this write and the
     // manifest append makes the resumed run re-validate those partitions —
     // REPLACING their violation files instead of appending duplicates
@@ -360,7 +336,9 @@ object ValidationPipeline {
     r.violations.write.mode("overwrite")
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy(cfg.partCol).parquet(s"$outDir/violations")
-    store.append(r.manifest)
-    r
+    val committed = store.append(r.manifest)
+    r.violations.unpersist()
+    digest.unpersist()
+    r.copy(manifest = committed)
   }
 }

@@ -512,7 +512,9 @@ final class ManifestStore(spark: SparkSession, root: String) {
   private val manifestDir = new Path(root, "_manifest")
   private def fs = manifestDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  def append(rows: DataFrame): Unit = {
+  /** Commits `rows` as one batch and returns the committed batch, read back
+    * from its files. */
+  def append(rows: DataFrame): DataFrame = {
     val batch = java.util.UUID.randomUUID().toString
     // write to a staging dir, then one atomic rename into the visible
     // batch=* namespace — a crashed append leaves only invisible staging
@@ -524,6 +526,7 @@ final class ManifestStore(spark: SparkSession, root: String) {
     rows.coalesce(1).write.mode(SaveMode.ErrorIfExists).parquet(staging.toString)
     if (!fs.rename(staging, target))
       throw new java.io.IOException(s"manifest commit rename failed: $target")
+    spark.read.schema(rows.schema).parquet(target.toString)
   }
 
   private def batchPaths: Seq[String] =

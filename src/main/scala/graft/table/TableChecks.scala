@@ -494,18 +494,6 @@ object TableChecks {
     } finally merged.unpersist(blocking = false)
   }
 
-  /** KS as a scalar plus the asymptotic two-sample p-value
-    * P(D > d) ≈ 2 Σ (-1)^{k-1} e^{-2 k² λ²}, λ = d·sqrt(na·nb/(na+nb)). */
-  def ksTest(current: DataFrame, baseline: DataFrame, column: String): (Double, Double) = {
-    val d = ksStatistic(current, baseline, column).collect()(0).getDouble(0)
-    val na = current.count().toDouble
-    val nb = baseline.count().toDouble
-    val lambda = d * math.sqrt(na * nb / (na + nb))
-    val p = 2.0 * (1 to 100).map(k =>
-      math.pow(-1.0, k - 1) * math.exp(-2.0 * k * k * lambda * lambda)).sum
-    (d, math.max(0.0, math.min(1.0, p)))
-  }
-
   /** Chi-squared statistic of current category frequencies vs baseline
     * expectations: Σ (o - e)² / e with e scaled to the current total.
     * Categories absent from the baseline contribute with a 0.5 pseudo-count
@@ -547,15 +535,6 @@ object TableChecks {
         (coalesce(col("eRaw").cast(DoubleType), lit(0.5)) * lit(totals / totalE)).as("e"))
       .agg(sum(pow(col("o") - col("e"), 2) / col("e")).as("chi2_stat"),
            count(lit(1)).as("n_categories"))
-  }
-
-  /** Chi-squared test: (statistic, degrees of freedom, p-value).
-    * p = Q(k/2, x/2), the regularized upper incomplete gamma. */
-  def chiSquaredTest(current: DataFrame, baseline: DataFrame, column: String): (Double, Long, Double) = {
-    val row = chiSquaredStatistic(current, baseline, column).collect()(0)
-    val stat = row.getDouble(0)
-    val dof = math.max(1L, row.getLong(1) - 1)
-    (stat, dof, GammaMath.regularizedGammaQ(dof / 2.0, stat / 2.0))
   }
 
   /** Population Stability Index + Jensen–Shannon divergence of a categorical

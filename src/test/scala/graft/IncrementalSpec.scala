@@ -243,8 +243,15 @@ class IncrementalSpec extends SparkSpec {
       assert(metric(row, "max_n_tok") == mx.toDouble)
       val approxNd = metric(row, "approx_distinct_doc_id")
       assert(math.abs(approxNd - nd) / nd < 0.1, s"HLL $approxNd vs $nd")
-      assert(metric(row, "ks_stat") >= 0.0)
-      assert(metric(row, "chi2_stat") >= 0.0)
+    }
+    // drift: the merged per-run counts give the full run's statistics
+    val fullDrift = full.manifest.collect().map(r => r.getAs[String]("partition_key") ->
+      (metric(r, "ks_stat"), metric(r, "chi2_stat"))).toMap
+    for (row <- m) {
+      val (ks, chi2) = fullDrift(row.getAs[String]("partition_key"))
+      assert(metric(row, "ks_stat") == ks)
+      assert(math.abs(metric(row, "chi2_stat") - chi2) <= 1e-12 * chi2,
+        s"chi2 ${metric(row, "chi2_stat")} vs $chi2")
     }
     // t-digest p50 per partition: rank of the merged-digest median is ~0.5
     val p50 = m.map(r => r.getAs[String]("partition_key") ->

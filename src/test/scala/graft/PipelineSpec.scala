@@ -2,8 +2,9 @@ package graft
 
 import graft.run.{PipelineConfig, ValidationJob, ValidationPipeline}
 import graft.snapshot.{ManifestStore, ParquetSnapshotStore}
+import graft.table.TableChecks
 import graft.tokens.TokenSeqs
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import java.nio.file.Files
 
@@ -94,6 +95,82 @@ class PipelineSpec extends SparkSpec {
     // KS between U(1,512) and U(257,512) is ~0.5 >> threshold 0.1
     assert(m.forall(x => x.getAs[Map[String, Double]]("metrics")("ks_stat") > 0.3))
     assert(m.forall(x => !x.getAs[Boolean]("verdict")))
+  }
+
+  private def metric(row: Row, name: String): java.lang.Double =
+    row.getMap[String, java.lang.Double](row.fieldIndex("metrics"))(name)
+
+  private val lax = PipelineConfig("""{"type": "object"}""")
+
+  test("drift: a null category is one category on both sides, not a χ² false alarm") {
+    import spark.implicits._
+    // one partition, 10 `web` and 5 null-source rows, and its own baseline
+    val facts = ((1 to 10).map(i => (s"w$i", 0L, Option(5), "web")) ++
+      (1 to 5).map(i => (s"n$i", 0L, Option(5), null: String)))
+      .toDF("doc_id", "part", "n_tok", "source")
+    val row = ValidationPipeline.run(spark, facts, None, Some(facts), lax, "run-null-cat")
+      .manifest.collect().head
+    assert(metric(row, "chi2_categories") == 2.0)
+    assert(math.abs(metric(row, "chi2_stat")) < 1e-12, s"chi2 ${metric(row, "chi2_stat")}")
+    assert(math.abs(metric(row, "psi_stat")) < 1e-12, s"psi ${metric(row, "psi_stat")}")
+    assert(metric(row, "chi2_p") == 1.0)
+    assert(row.getAs[Boolean]("verdict"))
+  }
+
+  test("drift: an all-null numeric drift column leaves that partition ungated by KS") {
+    import spark.implicits._
+    val facts = ((1 to 6).map(i => (s"a$i", 0L, Option.empty[Int], "web")) ++
+      (1 to 6).map(i => (s"b$i", 1L, Option(5), "web")))
+      .toDF("doc_id", "part", "n_tok", "source")
+    val base = (1 to 6).map(i => (s"c$i", 0L, Option(5), "web"))
+      .toDF("doc_id", "part", "n_tok", "source")
+    val m = ValidationPipeline.run(spark, facts, None, Some(base), lax, "run-null-num")
+      .manifest.collect().map(r => r.getAs[String]("partition_key") -> r).toMap
+    assert(metric(m("0"), "ks_stat") == null)
+    assert(m("0").getAs[Boolean]("verdict"))
+    assert(metric(m("1"), "ks_stat") == 0.0)
+    // an all-null baseline leaves every partition ungated by KS
+    val nullBase = base.withColumn("n_tok", lit(null).cast("int"))
+    val m2 = ValidationPipeline.run(spark, facts, None, Some(nullBase), lax, "run-null-base")
+      .manifest.collect()
+    assert(m2.forall(r => metric(r, "ks_stat") == null && r.getAs[Boolean]("verdict")))
+  }
+
+  test("drift oracle: per-partition KS and χ² equal TableChecks on each partition's rows") {
+    val base = gen(3000, 43L, 0.0, 4)
+    def someNullSources(df: DataFrame): DataFrame = df.withColumn("source",
+      when(pmod(xxhash64(col("doc_id")), lit(7)) === 0, lit(null).cast("string"))
+        .otherwise(col("source")))
+    val cases = Seq(
+      ("1%", gen(3000, 42L, 0.01, 4), base),
+      ("30%", gen(3000, 42L, 0.30, 4), base),
+      ("null category", someNullSources(gen(3000, 44L, 0.01, 4)), someNullSources(base)))
+    for ((label, facts, b) <- cases) {
+      val m = ValidationPipeline.run(spark, facts, None, Some(b), cfg, "run-oracle")
+        .manifest.collect()
+      assert(m.length == 4, label)
+      for (row <- m) {
+        val p = facts.filter(col("part") === row.getAs[String]("partition_key").toLong)
+        val ks = TableChecks.ksStatistic(p, b, "n_tok").head().getDouble(0)
+        val chi2 = TableChecks.chiSquaredStatistic(p, b, "source").head()
+        assert(metric(row, "ks_stat") == ks, label)
+        val got = metric(row, "chi2_stat").doubleValue
+        assert(math.abs(got - chi2.getDouble(0)) <= 1e-12 * math.abs(chi2.getDouble(0)),
+          s"$label: chi2 $got vs ${chi2.getDouble(0)}")
+        assert(metric(row, "chi2_categories") == chi2.getLong(1).toDouble, label)
+      }
+    }
+  }
+
+  test("runAndCommit releases its caches and returns the committed manifest") {
+    val out = tmp()
+    spark.catalog.clearCache()
+    val r = ValidationPipeline.runAndCommit(spark, gen(2000, 5L, 0.01, 4), Some(dim),
+      Some(gen(2000, 6L, 0.0, 4)), cfg, "run-cache", out)
+    assert(spark.sharedState.cacheManager.isEmpty)
+    def stamps(df: DataFrame) = df.select("partition_key", "committed_at").collect().toSet
+    assert(stamps(r.manifest) == stamps(new ManifestStore(spark, out).readAll()))
+    assert(stamps(r.manifest).size == 4)
   }
 
   test("manifest resume: completed partitions are skipped, restart completes the run") {

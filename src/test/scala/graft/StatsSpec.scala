@@ -25,6 +25,33 @@ class StatsSpec extends SparkSpec {
     assert(nulls.count() == 0)
   }
 
+  test("count_histogram: exact per-group counts across partitions, null one value, sorted") {
+    import graft.functions.CountHistogram
+    // 8 input partitions force partial buffers through serialize + merge
+    val df = Seq[(Int, Option[Double], Option[String])](
+      (0, Some(2.0), Some("b")), (0, Some(-0.0), Some("a")), (0, Some(0.0), None),
+      (0, Some(Double.NaN), Some("b")), (0, None, None), (0, Some(2.0), Some("\u00e9")),
+      (1, Some(1.0), Some("a"))).toDF("g", "v", "k").repartition(8)
+    val h = df.groupBy("g").agg(CountHistogram(col("v")).as("hv"), CountHistogram(col("k")).as("hk"))
+      .orderBy("g").collect()
+    def pairs(r: org.apache.spark.sql.Row, c: String) =
+      r.getSeq[org.apache.spark.sql.Row](r.fieldIndex(c)).map(x => (x.get(0), x.getLong(1)))
+    // -0.0 groups with 0.0 and NaN sorts last, as in groupBy/orderBy
+    assert(pairs(h(0), "hv").map { case (v, n) => (String.valueOf(v), n) } ==
+      Seq(("null", 1L), ("0.0", 2L), ("2.0", 2L), ("NaN", 1L)))
+    assert(pairs(h(0), "hk") == Seq((null, 2L), ("a", 1L), ("b", 2L), ("\u00e9", 1L)))
+    assert(pairs(h(1), "hv") == Seq((1.0, 1L)))
+    // weights add up a count column; a null weight skips the row
+    val w = Seq(("x", Some(3L)), ("x", Some(4L)), ("y", None)).toDF("k", "n")
+      .agg(CountHistogram(col("k"), col("n"))).head()
+    assert(w.getSeq[org.apache.spark.sql.Row](0).map(x => (x.getString(0), x.getLong(1))) ==
+      Seq(("x", 7L)))
+    // other value types are refused at analysis
+    intercept[org.apache.spark.sql.AnalysisException] {
+      Seq(1, 2).toDF("i").agg(CountHistogram(col("i"))).collect()
+    }
+  }
+
   test("fdViolations: multi-valued determinants reported, null dependents are missing not conflicting") {
     val df = Seq(
       ("a", Some("x")), ("a", Some("x")), ("a", Some("y")),  // a → {x,y}: violation

@@ -1,245 +1,8 @@
 package graft
 
-import graft.run.{PipelineConfig, ValidationPipeline}
-import graft.tokens.TokenSeqs
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
-
-/** Benchmark main (driver contract): runs every SparkEntry query on
-  * SPARK_GRAFT_SF_DIR, plus the full constraint-validation pipeline at two
-  * parallelism levels — local[8] (N) and local[32] (4N) — on the identical
-  * synthesized input, reporting validated-sequences/sec at both and the
-  * scaling efficiency (BASELINE.md protocol; north rule requires ≥ 0.8).
-  * Prints ONE JSON line.
-  */
+/** Benchmark main: prints ONE JSON line — the query sweep and the N/4N
+  * scaling measurement ([[Harness.bench]]). Its name and output format are
+  * a fixed contract. */
 object Bench {
-
-  /** JSON-safe number: NaN (skipped measurement) renders as null. */
-  private def jsNum(x: Double): String = if (x.isNaN) "null" else x.toString
-
-  private def session(cpus: Int): SparkSession = {
-    val s = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName(s"graft-bench-$cpus")
-      .config("spark.sql.shuffle.partitions", cpus.toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
-
-  /** Materialize the bench input once — NOT timed. The logical partition
-    * count is FIXED (not tied to core count) so every parallelism level
-    * validates the identical job over the identical input. */
-  private def materializeInput(spark: SparkSession, rows: Long, inputDir: String): Unit = {
-    val logicalParts = 64
-    val factsPath = s"$inputDir/facts_$rows"
-    def gen(seed: Long, rate: Double): DataFrame =
-      TokenSeqs.synthesize(spark, rows, seed, rate, numPartitions = logicalParts)
-        .withColumn("part",
-          pmod(xxhash64(coalesce(col("doc_id"), lit(""))), lit(logicalParts)))
-    if (!new java.io.File(factsPath).exists()) {
-      gen(42L, 0.01).write.parquet(factsPath)
-      gen(43L, 0.0).write.parquet(s"$inputDir/baseline_$rows")
-    }
-  }
-
-  /** One measurement pass at the current session's parallelism.
-    * Returns (validated seq/sec steady, cold full-pipeline sec — NaN if skipped).
-    *
-    * Steady-state constraint-eval throughput (the metric BASELINE.json names):
-    * the violations path is shuffle-free, so re-executing the same warm plan's
-    * toRdd fully re-runs scan + validate + extract on every rep — no
-    * shuffle-output reuse can short-circuit it, no per-rep re-planning, and
-    * warm reps measure the engine, not the one-time codegen/JIT a 10^9-row
-    * production job amortizes to zero. */
-  private def pipelineThroughput(spark: SparkSession, rows: Long, inputDir: String,
-                                 measureCold: Boolean): (Double, Double) = {
-    val facts = spark.read.parquet(s"$inputDir/facts_$rows")
-    val cfg = PipelineConfig(TokenSeqs.canonicalSchemaJson())
-
-    // cold full job: scan → row constraints → RI → uniqueness → stats →
-    // drift → manifest, built and executed once — includes the one-time
-    // per-plan driver costs. Reported as honest single-job latency; NOT part
-    // of the efficiency gate, so later passes skip it to shorten the run.
-    val coldSec = if (!measureCold) Double.NaN else {
-      val baseline = spark.read.parquet(s"$inputDir/baseline_$rows")
-      val dim = spark.createDataFrame(Seq(("web", ""), ("books", ""), ("code", ""), ("wiki", "")))
-        .toDF("source", "description")
-      val t0 = System.nanoTime()
-      val r = ValidationPipeline.run(spark, facts, Some(dim), Some(baseline), cfg, "bench")
-      r.violations.count()
-      r.manifest.agg(sum("row_count")).collect()
-      val sec = (System.nanoTime() - t0) / 1e9
-      r.violations.unpersist()
-      sec
-    }
-
-    val doc = graft.model.SchemaParser.parse(cfg.schemaJson)
-    val violRdd = graft.row.RowValidator
-      .violations(facts, doc, cfg.idCol, extraCols = Seq(cfg.partCol))
-      .queryExecution.toRdd
-    violRdd.count() // warm this plan's generated classes
-    // steady time = min over reps (the canonical noise-free estimator).
-    // Rep count is ADAPTIVE: this shared host's tenant load is bursty —
-    // measured rep sequences like 83s, 45s, 17s, 8.3s, 8.7s at 8 cores —
-    // so a fixed best-of-3 can record a transient at several times the true
-    // steady cost. Keep running (bounded at 8) until the minimum has not
-    // improved for 3 consecutive reps; every level's min is what the engine
-    // does when it actually gets the cores it asked for.
-    val times = scala.collection.mutable.ArrayBuffer[Double]()
-    var sinceBest = 0
-    while (times.size < 8 && (times.size < 3 || sinceBest < 3)) {
-      val t0 = System.nanoTime()
-      violRdd.count()
-      val t = (System.nanoTime() - t0) / 1e9
-      if (times.isEmpty || t < times.min * 0.98) sinceBest = 0 else sinceBest += 1
-      times += t
-    }
-    (rows / times.min, coldSec)
-  }
-
-  def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    // 10M rows ≈ 8.5 GB parquet: large enough that distributed compute (not
-    // fixed per-job scheduling overhead) dominates the scaling measurement
-    val benchRows = sys.env.getOrElse("SPARK_GRAFT_BENCH_ROWS", "10000000").toLong
-
-    // SPARK_GRAFT_SCALING_ONLY=1 skips the query sweep (reports 0 per-query
-    // times) so the scaling measurement can be re-taken inside a short quiet
-    // window on this co-tenanted host; the driver always runs the full sweep
-    val scalingOnly = sys.env.get("SPARK_GRAFT_SCALING_ONLY").contains("1")
-
-    // ---- phase 1: oracle-checked queries at full parallelism ----
-    var spark = session(cpus)
-    // one-time session bootstrap (BlockManager, first parquet footer read,
-    // Janino/JIT init) is NOT any query's cost: without this warmup the
-    // map-order-first query absorbed ~5-7 s of it (q_row_violations recorded
-    // 8.1 s at sf0.1 AND 8.3 s at sf0.01 — size-independent, i.e. bootstrap)
-    spark.range(1000).select(sum(col("id"))).collect()
-    spark.read.parquet(s"$sfDir/region.parquet").count()
-    // Per-query time = MIN over reps (same estimator seq_per_sec already
-    // uses): the first rep pays plan construction + Janino codegen + JIT and
-    // absorbs any contention burst on this co-tenanted host; warm reps
-    // measure the engine. Always 2 reps, a 3rd while the query is cheap
-    // (<5 s best-so-far) — warm reps of sub-second queries cost almost
-    // nothing, and the min is robust to a single contended window.
-    val results =
-      if (scalingOnly) SparkEntry.queries.map { case (name, _) => name -> 0.0 }
-      else SparkEntry.queries.map { case (name, fn) =>
-        var best = Double.MaxValue
-        var rep = 0
-        while (rep < 2 || (rep < 3 && best < 5.0)) {
-          val t0 = System.nanoTime()
-          try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
-          best = math.min(best, (System.nanoTime() - t0) / 1e9)
-          rep += 1
-        }
-        name -> best
-      }
-
-    // ---- phase 2: scaling measurement, N vs 4N cores (north rule) ----
-    // one fresh session per level so shuffle.partitions matches core count.
-    val inputDir = java.nio.file.Files.createTempDirectory("graft-bench").toString
-    materializeInput(spark, benchRows, inputDir)
-    def atLevel(level: Int, measureCold: Boolean): (Double, Double) = {
-      spark.stop()
-      SparkSession.clearActiveSession(); SparkSession.clearDefaultSession()
-      spark = session(level)
-      pipelineThroughput(spark, benchRows, inputDir, measureCold)
-    }
-    // N vs 4N cores (the driver-sanctioned "N and 4N cores" proxy), levels
-    // configurable via SPARK_GRAFT_N_CORES (default 2 → 4N = 8). The levels
-    // must BOTH sit inside this single box's memory-bandwidth envelope for
-    // the ratio to measure COMPUTE scaling: one node has ONE memory bus, so
-    // throughput flattens as thread count approaches saturation (measured
-    // same-day on this host, 10M rows, quiet: 2→8 cores = 0.83 efficiency;
-    // 4→16 = 0.74 — the extra loss is the bus, not the engine; the real
-    // criterion, N vs 4N EXECUTORS, scales bandwidth with nodes). 2→8 is
-    // the widest pair whose upper level stays clearly inside the envelope.
-    // local[32] is still reported as the absolute single-node headline, and
-    // every raw pass at both levels is emitted for the reader.
-    val nCores = sys.env.getOrElse("SPARK_GRAFT_N_CORES", "2").toInt
-    val n4Cores = nCores * 4
-    //
-    // The host's vCPU supply FLUCTUATES (shared machine; round 1 recorded a
-    // physically-impossible 4N-slower-than-N inversion on this shuffle-free
-    // path). Hardening:
-    //  (a) the two levels are measured as ADJACENT-IN-TIME PAIRS, order
-    //      alternating (4,16 then 16,4, ...), so a contention window hits
-    //      both sides of a pair roughly equally and each pair's ratio stays
-    //      internally consistent;
-    //  (b) if after the base pairs the best evidence of scaling is still
-    //      below the 0.8 gate — which on this path can only mean contention —
-    //      further pairs run (bounded), keeping the best;
-    //  (c) every pass's raw throughput is emitted in the JSON (`passes`), so
-    //      a contended run is self-evident to the reader.
-    val maxPairs = 6
-    val pairs = scala.collection.mutable.ArrayBuffer[(Double, Double)]() // (tputN, tput4N)
-    var passLog = List.empty[String]
-    var pairIdx = 0
-    var coldN = Double.NaN; var cold4N = Double.NaN
-    def runPair(): Unit = {
-      val order = if (pairIdx % 2 == 0) Seq(nCores, n4Cores) else Seq(n4Cores, nCores)
-      val cold = pairIdx == 0
-      val byLevel = order.map(l => l -> atLevel(l, cold)).toMap
-      pairs += ((byLevel(nCores)._1, byLevel(n4Cores)._1))
-      passLog ++= order.map(l => s"""{"cores":$l,"seq_per_sec":${byLevel(l)._1}}""")
-      if (cold) { coldN = byLevel(nCores)._2; cold4N = byLevel(n4Cores)._2 }
-      pairIdx += 1
-    }
-    runPair(); runPair(); runPair()
-    def bestOfLevel = (pairs.map(_._2).max / pairs.map(_._1).max) / 4.0
-    def medianPairwise = {
-      val rs = pairs.map(p => (p._2 / p._1) / 4.0).sorted
-      rs(rs.size / 2)
-    }
-    // HEADLINE = median of the per-pair ratios, capped at 1.0 (superlinear
-    // scaling on a shared-memory box can only mean the N-side half of a pair
-    // was contention-suppressed). A contended pair stays in the median when
-    // more pairs are added, so the retry loop below only lifts the headline
-    // if the MAJORITY of evidence is clean — it cannot cherry-pick one lucky
-    // pass. best-of-level (cleanest window per level) is emitted as a
-    // secondary contention diagnostic only, never as the gate value; every
-    // raw pass is in `passes`.
-    def efficiency = math.min(1.0, medianPairwise)
-    while (efficiency < 0.8 && pairIdx < maxPairs) runPair()
-
-    val tputN = pairs.map(_._1).max
-    val tput4N = pairs.map(_._2).max
-    // secondary DIAGNOSTIC pair at 4↔16 cores (one adjacent-in-time pair):
-    // published alongside the 2↔8 gate pair every round so the level-pair
-    // choice (BASELINE.md discloses the bandwidth-envelope rationale) stays
-    // evidence, not selection. Expected lower than 2↔8 on this box — 16
-    // threads run near single-bus saturation. Skippable for quiet-window
-    // scaling re-takes via SPARK_GRAFT_SKIP_DIAG=1.
-    val skipDiag = sys.env.get("SPARK_GRAFT_SKIP_DIAG").contains("1")
-    val (diag4, diag16) =
-      if (skipDiag) (Double.NaN, Double.NaN)
-      else (atLevel(4, measureCold = false)._1, atLevel(16, measureCold = false)._1)
-    val diagEff = if (skipDiag) Double.NaN else (diag16 / diag4) / 4.0
-    // absolute single-node headline at local[32] (not part of the gate)
-    val tputMax = atLevel(32, measureCold = false)._1
-
-    // the materialized bench input is per-run scratch — reclaim the ~17 GB
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(inputDir))
-
-    val qs = results.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
-    val total = if (results.nonEmpty) results.values.sum else 0.0
-    println(s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,""" +
-      s""""sf":"$sfDir","scaling":{"rows":$benchRows,"n_cores":$nCores,"4n_cores":$n4Cores,""" +
-      s""""seq_per_sec_n":$tputN,"seq_per_sec_4n":$tput4N,""" +
-      s""""seq_per_sec_local32":$tputMax,"efficiency_n_to_4n":$efficiency,""" +
-      s""""diag_seq_per_sec_4":${jsNum(diag4)},"diag_seq_per_sec_16":${jsNum(diag16)},""" +
-      s""""diag_efficiency_4_to_16":${jsNum(diagEff)},""" +
-      s""""efficiency_best_of_level":$bestOfLevel,""" +
-      s""""efficiency_median_pairwise":$medianPairwise,""" +
-      s""""cold_job_sec_n":$coldN,"cold_job_sec_4n":$cold4N,""" +
-      s""""passes":[${passLog.mkString(",")}]}}""")
-    spark.stop()
-  }
+  def main(args: Array[String]): Unit = Harness.main(Array("bench"))
 }

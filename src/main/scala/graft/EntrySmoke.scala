@@ -1,22 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Flagship smoke: SparkEntry.entry at sf0.001 must yield violation rows > 0
-  * (the driver's smoke check). */
+  * ([[Harness.smoke]]). Its name and output format are a fixed contract. */
 object EntrySmoke {
-  def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val df = SparkEntry.entry(spark)
-    val n = df.count()
-    println(s"[smoke] entry rows = $n")
-    df.show(5, truncate = false)
-    spark.stop()
-    if (n <= 0) sys.exit(1)
-  }
+  def main(args: Array[String]): Unit = Harness.main(Array("smoke"))
 }

@@ -94,7 +94,7 @@ object SparkEntry {
       .start()
     q.awaitTermination()
     // Detach the result from the sink's temp view so repeated invocations
-    // (Bench/QueryTime reps) don't pin every run's result set in driver
+    // (the Bench and `time` reps) don't pin every run's result set in driver
     // memory for the JVM lifetime: copy the rows out, drop the view.
     val rows = s.table(name).collect()
     val schema = s.table(name).schema

@@ -49,11 +49,28 @@ object Repair {
   /** A numeric bound as the TIGHTEST in-type literal: casting a fractional
     * bound to an integral column truncates toward zero, which can clamp a
     * value ONTO a number that still violates the bound (minimum 5.7 →
-    * cast 5 < 5.7) — minima round up, maxima round down. */
-  private def boundLit(v: Double, dt: DataType, isMin: Boolean): Column = dt match {
-    case ByteType | ShortType | IntegerType | LongType =>
-      lit(if (isMin) math.ceil(v) else math.floor(v)).cast(dt)
-    case _ => lit(v).cast(dt)
+    * cast 5 < 5.7) — minima round up, maxima round down. The rounded bound
+    * is then clamped to the type's range (a cast would wrap: `minimum: 300`
+    * on a byte column is 44); None when no in-type value satisfies it, so
+    * the rule is skipped and violations() reports the row instead. */
+  private def boundLit(v: Double, dt: DataType, isMin: Boolean): Option[Column] = {
+    val range = dt match {
+      case ByteType => Some((Byte.MinValue.toLong, Byte.MaxValue.toLong))
+      case ShortType => Some((Short.MinValue.toLong, Short.MaxValue.toLong))
+      case IntegerType => Some((Int.MinValue.toLong, Int.MaxValue.toLong))
+      case LongType => Some((Long.MinValue, Long.MaxValue))
+      case _ => None
+    }
+    range match {
+      case None => Some(lit(v).cast(dt))
+      case Some((lo, hi)) =>
+        val b = if (isMin) math.ceil(v) else math.floor(v)
+        // exact compare: Long.MaxValue.toDouble rounds up to 2^63
+        def cmp(x: Long): Int =
+          if (b.isInfinite) b.sign.toInt else BigDecimal.exact(b).compare(BigDecimal(x))
+        if (if (isMin) cmp(hi) > 0 else cmp(lo) < 0) None
+        else Some(lit(if (cmp(lo) <= 0) lo else if (cmp(hi) >= 0) hi else b.toLong).cast(dt))
+    }
   }
 
   /** The repair expression for one property, or None when no repair rule
@@ -64,12 +81,12 @@ object Repair {
 
     // numeric clamp
     if (isNumeric(dt)) {
-      val lo = kws.collectFirst { case MinimumK(v) => v }
-      val hi = kws.collectFirst { case MaximumK(v) => v }
+      val lo = kws.collectFirst { case MinimumK(v) => v }.flatMap(boundLit(_, dt, isMin = true))
+      val hi = kws.collectFirst { case MaximumK(v) => v }.flatMap(boundLit(_, dt, isMin = false))
       if (lo.isDefined || hi.isDefined) {
         var x = cur
-        lo.foreach(v => x = greatest(x, boundLit(v, dt, isMin = true)))
-        hi.foreach(v => x = least(x, boundLit(v, dt, isMin = false)))
+        lo.foreach(b => x = greatest(x, b))
+        hi.foreach(b => x = least(x, b))
         cur = when(cur.isNull, cur).otherwise(x)
         touched = true
       }
@@ -110,13 +127,13 @@ object Repair {
         }
         kws.collectFirst { case ItemsK(ObjSchema(ik)) => ik }.foreach { ik =>
           if (isNumeric(et)) {
-            val lo = ik.collectFirst { case MinimumK(v) => v }
-            val hi = ik.collectFirst { case MaximumK(v) => v }
+            val lo = ik.collectFirst { case MinimumK(v) => v }.flatMap(boundLit(_, et, isMin = true))
+            val hi = ik.collectFirst { case MaximumK(v) => v }.flatMap(boundLit(_, et, isMin = false))
             if (lo.isDefined || hi.isDefined) {
               cur = when(cur.isNull, cur).otherwise(transform(cur, x => {
                 var y = x
-                lo.foreach(v => y = greatest(y, boundLit(v, et, isMin = true)))
-                hi.foreach(v => y = least(y, boundLit(v, et, isMin = false)))
+                lo.foreach(b => y = greatest(y, b))
+                hi.foreach(b => y = least(y, b))
                 when(x.isNull, x).otherwise(y)
               }))
               touched = true

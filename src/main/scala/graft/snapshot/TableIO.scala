@@ -4,30 +4,6 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.hadoop.fs.{FileSystem, Path}
 
-/** Iceberg-style snapshot semantics emulated over partitioned Parquet
-  * (SURVEY §7.4.6 — no Iceberg jar ships in this sandbox; verified 0/287 jars).
-  *
-  * Layout of a snapshot table rooted at `root`:
-  * {{{
-  *   root/snap=<id>/part=<k>/ ... .parquet  immutable data files per snapshot
-  *   root/_commits/<id>                    zero-byte commit marker (atomic rename)
-  * }}}
-  *
-  * A snapshot is visible iff its commit marker exists — a crashed writer leaves
-  * data files but no marker, so readers never observe partial snapshots. This
-  * mirrors Iceberg's metadata-pointer swap at the fidelity the engine needs:
-  * snapshot-id-addressed immutable reads + append-only commits. The interface
-  * is deliberately small so a real Iceberg catalog can slot in unchanged.
-  */
-trait TableIO {
-  /** Latest committed snapshot id, if any. */
-  def currentSnapshot(table: String): Option[Long]
-  /** Read a specific snapshot (or the latest). */
-  def read(table: String, snapshotId: Option[Long] = None): DataFrame
-  /** Write a new snapshot; returns its id. `df` must carry `partitionCol`. */
-  def commit(table: String, df: DataFrame, partitionCol: String): Long
-}
-
 private[snapshot] object SnapshotWrite {
   /** Cluster rows by the layout partition column before a `partitionBy`
     * write. Without this, every write task holds one open parquet writer PER
@@ -41,57 +17,22 @@ private[snapshot] object SnapshotWrite {
     df.hint("rebalance", col(partitionCol))
 }
 
-final class ParquetSnapshotStore(spark: SparkSession, root: String) extends TableIO {
-
-  private def tableRoot(table: String) = new Path(root, table)
-  private def fs(p: Path) = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  private def committedIds(table: String): Seq[Long] = {
-    val commits = new Path(tableRoot(table), "_commits")
-    val f = fs(commits)
-    if (!f.exists(commits)) Seq.empty
-    else f.listStatus(commits).toSeq.map(_.getPath.getName.toLong).sorted
-  }
-
-  override def currentSnapshot(table: String): Option[Long] =
-    committedIds(table).lastOption
-
-  override def read(table: String, snapshotId: Option[Long]): DataFrame = {
-    val id = snapshotId.orElse(currentSnapshot(table))
-      .getOrElse(throw new IllegalStateException(s"no committed snapshot in $table"))
-    require(committedIds(table).contains(id), s"snapshot $id of $table was never committed")
-    spark.read.parquet(new Path(tableRoot(table), s"snap=$id").toString)
-  }
-
-  override def commit(table: String, df: DataFrame, partitionCol: String): Long = {
-    val id = currentSnapshot(table).getOrElse(0L) + 1L
-    val dataPath = new Path(tableRoot(table), s"snap=$id")
-    // a crashed writer may have left partial data files for this id with no
-    // commit marker — that snapshot was never visible to any reader, so
-    // clearing it before the retry is safe (and ErrorIfExists would
-    // otherwise fail the retry forever).
-    val df0 = fs(dataPath)
-    if (df0.exists(dataPath)) df0.delete(dataPath, true)
-    SnapshotWrite.clustered(df, partitionCol).write.mode(SaveMode.ErrorIfExists)
-      .partitionBy(partitionCol).parquet(dataPath.toString)
-    // commit marker last — readers only see fully-written snapshots
-    val marker = new Path(new Path(tableRoot(table), "_commits"), id.toString)
-    val f = fs(marker)
-    f.mkdirs(marker.getParent)
-    val out = f.create(marker, false)
-    out.close()
-    id
-  }
-}
-
 /** Iceberg APPEND-table semantics: each snapshot directory holds ONLY the
   * files added by that commit, and reading "the table as of snapshot s" is
   * the union of all committed snapshot dirs ≤ s — which is exactly what
   * makes INCREMENTAL processing possible: `readBetween(a, b)` reads only the
   * delta files, so revalidating a 100 TB table after a 0.1% append costs
-  * 0.1% of a scan, not a full one. Same crash discipline as
-  * [[ParquetSnapshotStore]] (marker-last commits; uncommitted data dirs are
-  * invisible and cleared on retry).
+  * 0.1% of a scan, not a full one (SURVEY §7.4.6: Iceberg semantics
+  * emulated over partitioned Parquet, with no Iceberg dependency).
+  *
+  * Layout of a table rooted at `root/<table>`:
+  * {{{
+  *   snap=<id>/<partitionCol>=<k>/ ... .parquet  immutable files added by <id>
+  *   _commits/<id>                            commit marker (atomic create)
+  * }}}
+  * A snapshot is visible iff its commit marker exists: the marker is written
+  * last, so a crashed writer leaves data files but no marker, readers never
+  * observe a partial snapshot, and the retry clears the leftovers.
   *
   * Every read carries a `_snap_id` lineage column (from the `snap=` path
   * partition, or a data column inside compacted files), so downstream

@@ -1,7 +1,8 @@
 package graft
 
-import graft.compile.CompileOpts
-import graft.row.RowValidator
+import graft.compile.{CompileOpts, ConstraintCompiler}
+import graft.model.SchemaParser
+import org.apache.spark.sql.functions.{col, size}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.json4s._
@@ -20,7 +21,13 @@ import org.json4s.jackson.JsonMethods
   */
 class ConformanceSpec extends SparkSpec {
 
-  test("conformance corpus") {
+  private val modes = Seq(
+    "conformance" -> CompileOpts(nullIsAbsent = false),
+    "table" -> CompileOpts())
+
+  /** Every corpus instance: its label, its `valid` flag, and per mode in
+    * [[modes]] the compiled (valid, violations.isEmpty) — or what it threw. */
+  private lazy val results: Seq[(String, Boolean, Either[String, Seq[(Boolean, Boolean)]])] = {
     def read(f: String) = JsonMethods.parse(scala.io.Source.fromInputStream(
       getClass.getResourceAsStream(f), "UTF-8").mkString)
 
@@ -55,32 +62,51 @@ class ConformanceSpec extends SparkSpec {
     val JArray(g3) = (v3 \ "groups"): @unchecked
     val groups = flat ++ g3
 
-    val failures = scala.collection.mutable.Buffer[String]()
-    var total = 0
-    groups.foreach { g =>
+    groups.flatMap { g =>
       val desc = (g \ "description").asInstanceOf[JString].s
       val schemaJson = JsonMethods.compact(JsonMethods.render(g \ "schema"))
       val JArray(tests) = (g \ "tests"): @unchecked
-      tests.foreach { t =>
-        val tdesc = (t \ "description").asInstanceOf[JString].s
+      tests.map { t =>
+        val label = s"[$desc :: ${(t \ "description").asInstanceOf[JString].s}]"
         val expected = (t \ "valid").asInstanceOf[JBool].value
-        total += 1
-        try {
+        val got = try {
           val df = JsonInstances.toDf(spark, t \ "data")
-          val got = df.select(RowValidator.validColumn(df, schemaJson,
-            opts = CompileOpts(nullIsAbsent = false)).as("ok"))
-            .collect()(0).getBoolean(0)
-          if (got != expected)
-            failures += s"[$desc :: $tdesc] expected valid=$expected got=$got"
+          val doc = SchemaParser.parse(schemaJson)
+          val cols = modes.flatMap { case (_, opts) =>
+            val c = ConstraintCompiler.compile(doc, col("value"), df.schema("value").dataType, opts)
+            Seq(c.valid, size(c.violations) === 0)
+          }
+          val row = df.select(cols: _*).collect()(0)
+          Right(modes.indices.map(i => (row.getBoolean(2 * i), row.getBoolean(2 * i + 1))))
         } catch {
-          case e: Exception =>
-            failures += s"[$desc :: $tdesc] threw ${e.getClass.getSimpleName}: ${e.getMessage}"
+          case e: Exception => Left(s"threw ${e.getClass.getSimpleName}: ${e.getMessage}")
         }
+        (label, expected, got)
       }
     }
+  }
+
+  test("conformance corpus") {
+    val failures = results.collect {
+      case (label, expected, Right(got)) if got.head._1 != expected =>
+        s"$label expected valid=$expected got=${got.head._1}"
+      case (label, _, Left(err)) => s"$label $err"
+    }
     assert(failures.isEmpty,
-      s"\n${failures.size}/$total conformance failures:\n${failures.mkString("\n")}")
-    info(s"$total conformance cases passed")
+      s"\n${failures.size}/${results.size} conformance failures:\n${failures.mkString("\n")}")
+    info(s"${results.size} conformance cases passed")
+  }
+
+  // the compiler builds `valid` and `violations` as two expression DAGs;
+  // every verdict and report relies on them agreeing
+  test("valid ⇔ violations.isEmpty on every corpus instance, conformance and table mode") {
+    val disagreements = for {
+      (label, _, Right(got)) <- results
+      ((mode, _), (valid, noViolations)) <- modes.zip(got) if valid != noViolations
+    } yield s"$label $mode mode: valid=$valid violations.isEmpty=$noViolations"
+    assert(results.forall(_._3.isRight), "corpus instances threw: see \"conformance corpus\"")
+    assert(disagreements.isEmpty,
+      s"\n${disagreements.size} disagreements:\n${disagreements.mkString("\n")}")
   }
 }
 

@@ -1,7 +1,7 @@
 package graft
 
 import graft.run.{PipelineConfig, ValidationJob, ValidationPipeline}
-import graft.snapshot.{ManifestStore, ParquetSnapshotStore}
+import graft.snapshot.ManifestStore
 import graft.table.TableChecks
 import graft.tokens.TokenSeqs
 import org.apache.spark.sql.{DataFrame, Row}
@@ -229,31 +229,6 @@ class PipelineSpec extends SparkSpec {
     r.manifest.write.parquet(s"$out/_manifest/_staging-deadbeef")
     assert(store.readAll().filter(col("run_id") === "run-m").count() == 4)
     assert(store.completedPartitions("run-m").count() == 4)
-  }
-
-  test("snapshot commit retries over a crashed (marker-less) partial write") {
-    val out = tmp()
-    val store = new ParquetSnapshotStore(spark, out)
-    // fake a crashed writer: data files for snap=1 exist, no commit marker
-    gen(50, 3L, 0.0, 2).write.partitionBy("part").parquet(s"$out/t/snap=1")
-    assert(store.currentSnapshot("t").isEmpty)
-    val id = store.commit("t", gen(80, 4L, 0.0, 2), "part")
-    assert(id == 1L)
-    assert(store.read("t", Some(1L)).count() == 80)
-  }
-
-  test("snapshot store: commit/read isolation and marker-gated visibility") {
-    val out = tmp()
-    val store = new ParquetSnapshotStore(spark, out)
-    assert(store.currentSnapshot("t").isEmpty)
-    val df1 = gen(100, 1L, 0.0, 2)
-    val id1 = store.commit("t", df1, "part")
-    val id2 = store.commit("t", gen(200, 2L, 0.0, 2), "part")
-    assert((id1, id2) == (1L, 2L))
-    assert(store.read("t", Some(1L)).count() == 100)
-    assert(store.read("t").count() == 200) // latest
-    // uncommitted snapshot dir (no marker) is invisible
-    intercept[IllegalArgumentException] { store.read("t", Some(99L)) }
   }
 
   test("ValidationJob.runOnce end-to-end: summary JSON + manifest + violations on disk") {

@@ -90,4 +90,27 @@ class RepairSpec extends SparkSpec {
     // the repaired rows satisfy the schema (the repaired-rows-clean contract)
     assert(RowValidator.violations(rep, doc2, "lo").count() == 0)
   }
+
+  test("bounds outside an integral column's range clamp to it, never wrap") {
+    // a cast would wrap maximum 300 into a byte as 44 (and ANSI rejects it);
+    // minimum 300 fits no byte, so that rule is skipped and violations()
+    // still reports the row
+    val doc2 = SchemaParser.parse(
+      """{"properties": {
+           "b": {"type": "integer", "minimum": -300, "maximum": 300},
+           "out": {"type": "integer", "minimum": 300},
+           "l": {"type": "integer", "maximum": 1e19},
+           "xs": {"type": "array", "items": {"maximum": 1e30}}}}""")
+    val df = Seq((100.toByte, 5.toByte, Long.MaxValue - 1, Seq(7.toShort)))
+      .toDF("b", "out", "l", "xs")
+    val (rep, report) = Repair.repair(df, doc2)
+    val r = rep.collect().head
+    assert(r.getByte(0) == 100.toByte && r.getByte(1) == 5.toByte)
+    assert(r.getLong(2) == Long.MaxValue - 1)
+    assert(r.getSeq[Short](3) == Seq(7.toShort))
+    assert(report.as[(String, Long)].collect().toMap == Map("b" -> 0L, "l" -> 0L, "xs" -> 0L))
+    val v = RowValidator.violations(rep, doc2, "b").select("keyword", "instanceLocation")
+      .as[(String, String)].collect()
+    assert(v.toSeq == Seq(("minimum", "#/out")))
+  }
 }

@@ -1022,11 +1022,12 @@ object SparkEntry {
       val fresh = TokenSeqs.fromDocuments(streamTable(s, dir, "documents"))
         .withColumn("doc_id", col("doc_id").cast("long"))
         .filter(col("doc_id") >= 400)
-      val buf = scala.collection.mutable.ArrayBuffer[org.apache.spark.sql.Row]()
+      // filled from the micro-batch thread, read here after termination
+      val buf = new java.util.concurrent.ConcurrentLinkedQueue[org.apache.spark.sql.Row]()
       val q = graft.streaming.StreamingDedup.nearDupSink(fresh, store, "docs",
           sigDir, "doc_id", "tokens", "source", minJaccard = 0.5,
-          onPairs = p => buf ++= p.select(col("id_a"), col("id_b"),
-            round(col("jaccard"), 6).as("jaccard")).collect())
+          onPairs = p => p.select(col("id_a"), col("id_b"),
+            round(col("jaccard"), 6).as("jaccard")).collect().foreach(buf.add))
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
       q.awaitTermination()
       val schema = org.apache.spark.sql.types.StructType(Seq(
@@ -1036,7 +1037,7 @@ object SparkEntry {
           org.apache.spark.sql.types.LongType),
         org.apache.spark.sql.types.StructField("jaccard",
           org.apache.spark.sql.types.DoubleType)))
-      s.createDataFrame(java.util.Arrays.asList(buf.toSeq: _*), schema)
+      s.createDataFrame(new java.util.ArrayList(buf), schema)
     }),
 
     // ---- t-digest quantile sketch (custom TypedImperativeAggregate).

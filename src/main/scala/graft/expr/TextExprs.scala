@@ -1,11 +1,41 @@
 package graft.expr
 
 import org.apache.spark.sql.{Column, GraftSql}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, ExprCode, FalseLiteral}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
+
+/** A fixed word list matched byte-exactly against slices of UTF-8 text,
+  * without decoding them: the words are bucketed by byte length, so a slice
+  * is compared only with the words of its own length. */
+final class WordSet(words: Seq[String]) extends Serializable {
+  private val byLen: Array[Array[Array[Byte]]] = {
+    val bytes = words.distinct.map(_.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    val maxLen = if (bytes.isEmpty) -1 else bytes.map(_.length).max
+    Array.tabulate(maxLen + 1)(len => bytes.filter(_.length == len).toArray)
+  }
+
+  /** Whether the `len` bytes at `base`+`at` spell one of the words. */
+  def contains(base: AnyRef, at: Long, len: Int): Boolean = {
+    if (len >= byLen.length) return false
+    val cands = byLen(len)
+    var c = 0
+    while (c < cands.length) {
+      val w = cands(c)
+      var i = 0
+      while (i < len && w(i) == Platform.getByte(base, at + i)) i += 1
+      if (i == len) return true
+      c += 1
+    }
+    false
+  }
+}
 
 /** Native text/token primitives: the whitespace tokenizer that DERIVES the
   * canonical token table, stopword hit counting (language ID / quality), the
@@ -36,13 +66,83 @@ object TextUtil {
     new GenericArrayData(out)
   }
 
-  /** Count of ' '-split words contained in `words`. */
-  def stopwordHits(text: UTF8String, words: java.util.HashSet[String]): Int = {
-    val ws = text.toString.split(" ", -1)
-    var n = 0
+  /** Count of ' '-split words contained in `words`; one pass over the
+    * UTF-8 bytes, nothing allocated. */
+  def stopwordHits(text: UTF8String, words: WordSet): Int = {
+    val base = text.getBaseObject
+    val off = text.getBaseOffset
+    val n = text.numBytes
+    var hits = 0
+    var word = 0
     var i = 0
-    while (i < ws.length) { if (words.contains(ws(i))) n += 1; i += 1 }
-    n
+    while (i < n) {
+      if (Platform.getByte(base, off + i) == ' ') {
+        if (words.contains(base, off + word, i - word)) hits += 1
+        word = i + 1
+      }
+      i += 1
+    }
+    if (words.contains(base, off + word, n - word)) hits += 1
+    hits
+  }
+
+  /** The Gopher rule counts of one text in one pass over its UTF-8 bytes,
+    * nothing allocated but the result row: (n_words, n_chars, stop_hits,
+    * symbol_hits), each equal to its Column formulation —
+    * `size(split(t, " "))` (spaces + 1, empty pieces kept), `length(t)`
+    * (code points, stepped exactly like `UTF8String.numChars`),
+    * [[stopwordHits]], and `size(regexp_extract_all(t, "[#…]|\.\.\.", 0))`
+    * (non-overlapping leftmost matches; `…` is U+2026, bytes E2 80 A6). */
+  def gopherCounts(text: UTF8String, stops: WordSet): InternalRow = {
+    val base = text.getBaseObject
+    val off = text.getBaseOffset
+    val n = text.numBytes
+    var spaces = 0
+    var chars = 0
+    var hits = 0
+    var symbols = 0
+    var word = 0     // first byte of the current ' '-delimited word
+    var nextChar = 0 // first byte of the next code point
+    var nextSym = 0  // first byte a symbol match may start at
+    var i = 0
+    while (i < n) {
+      val b = Platform.getByte(base, off + i)
+      if (i == nextChar) { chars += 1; nextChar = i + UTF8String.numBytesForFirstByte(b) }
+      if (b == ' ') {
+        spaces += 1
+        if (stops.contains(base, off + word, i - word)) hits += 1
+        word = i + 1
+      }
+      if (i >= nextSym) {
+        val len =
+          if (b == '#') 1
+          else if (i + 2 < n && ((b == '.' && Platform.getByte(base, off + i + 1) == '.' &&
+                                   Platform.getByte(base, off + i + 2) == '.') ||
+                                 (b == 0xE2.toByte &&
+                                   Platform.getByte(base, off + i + 1) == 0x80.toByte &&
+                                   Platform.getByte(base, off + i + 2) == 0xA6.toByte))) 3
+          else 0
+        if (len > 0) { symbols += 1; nextSym = i + len }
+      }
+      i += 1
+    }
+    if (stops.contains(base, off + word, n - word)) hits += 1
+    new GenericInternalRow(Array[Any](spaces + 1, chars, hits, symbols))
+  }
+
+  /** True when the text holds an ASCII digit `[0-9]` (what `\d` matches
+    * in Java regex). */
+  def hasAsciiDigit(text: UTF8String): Boolean = {
+    val base = text.getBaseObject
+    val off = text.getBaseOffset
+    val n = text.numBytes
+    var i = 0
+    while (i < n) {
+      val b = Platform.getByte(base, off + i)
+      if (b >= '0' && b <= '9') return true
+      i += 1
+    }
+    false
   }
 
   /** k-word chunks of ' '-split text, each chunk re-joined with ' '. */
@@ -337,17 +437,67 @@ case class DedupLines(child: Expression, minLen: Int) extends UnaryExpression {
 case class StopwordHits(child: Expression, words: Seq[String]) extends UnaryExpression {
   override def dataType: DataType = IntegerType
   override def nullIntolerant: Boolean = true
-  @transient private lazy val set = {
-    val s = new java.util.HashSet[String](); words.foreach(s.add); s
-  }
+  @transient private lazy val set = new WordSet(words)
   override protected def nullSafeEval(v: Any): Any =
     TextUtil.stopwordHits(v.asInstanceOf[UTF8String], set)
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    // raw type: janino-generated code does not support generics
-    val ref = ctx.addReferenceObj("stopwordSet", set, "java.util.HashSet")
+    val ref = ctx.addReferenceObj("stopwordSet", set, "graft.expr.WordSet")
     defineCodeGen(ctx, ev, c => s"graft.expr.TextUtil.stopwordHits($c, $ref)")
   }
   override protected def withNewChildInternal(c: Expression): StopwordHits = copy(child = c)
+}
+
+/** `string` → `struct<n_words, n_chars, stop_hits, symbol_hits: int>`, the
+  * Gopher quality rule counts in one codegen'd byte scan
+  * ([[TextUtil.gopherCounts]]). A null text gives what the Column
+  * formulation gives: n_words and symbol_hits are `size(null)` (-1 under
+  * `legacySizeOfNull`, else null), n_chars and stop_hits are null; the
+  * struct itself is never null. */
+case class GopherCounts(child: Expression, stops: Seq[String], legacySizeOfNull: Boolean)
+    extends UnaryExpression {
+  def this(child: Expression, stops: Seq[String]) =
+    this(child, stops, SQLConf.get.legacySizeOfNull)
+  override def dataType: DataType = {
+    val sizeNullable = !legacySizeOfNull && child.nullable
+    StructType(Seq(
+      StructField("n_words", IntegerType, sizeNullable),
+      StructField("n_chars", IntegerType, child.nullable),
+      StructField("stop_hits", IntegerType, child.nullable),
+      StructField("symbol_hits", IntegerType, sizeNullable)))
+  }
+  override def nullable: Boolean = false
+  @transient private lazy val set = new WordSet(stops)
+  @transient private lazy val onNull: InternalRow = {
+    val size = if (legacySizeOfNull) -1 else null
+    new GenericInternalRow(Array[Any](size, null, null, size))
+  }
+  override def eval(input: InternalRow): Any = child.eval(input) match {
+    case null => onNull
+    case v => TextUtil.gopherCounts(v.asInstanceOf[UTF8String], set)
+  }
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val c = child.genCode(ctx)
+    val setRef = ctx.addReferenceObj("gopherStops", set, "graft.expr.WordSet")
+    val nullRef = ctx.addReferenceObj("gopherOnNull", onNull,
+      "org.apache.spark.sql.catalyst.InternalRow")
+    ev.copy(code = code"""
+      |${c.code}
+      |${CodeGenerator.javaType(dataType)} ${ev.value} = ${c.isNull} ? $nullRef
+      |  : graft.expr.TextUtil.gopherCounts(${c.value}, $setRef);
+      |""".stripMargin, isNull = FalseLiteral)
+  }
+  override protected def withNewChildInternal(c: Expression): GopherCounts = copy(child = c)
+}
+
+/** `string` → `boolean`: does the text hold an ASCII digit (codegen'd). */
+case class HasAsciiDigit(child: Expression) extends UnaryExpression {
+  override def dataType: DataType = BooleanType
+  override def nullIntolerant: Boolean = true
+  override protected def nullSafeEval(v: Any): Any =
+    TextUtil.hasAsciiDigit(v.asInstanceOf[UTF8String])
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, c => s"graft.expr.TextUtil.hasAsciiDigit($c)")
+  override protected def withNewChildInternal(c: Expression): HasAsciiDigit = copy(child = c)
 }
 
 /** `array<int>` → `bigint` rolling-hash fingerprint (codegen'd). */
@@ -427,6 +577,10 @@ object TextExprs {
     GraftSql.toColumn(AsciiTokens(GraftSql.toExpression(text)))
   def stopwordHits(text: Column, words: Seq[String]): Column =
     GraftSql.toColumn(StopwordHits(GraftSql.toExpression(text), words))
+  def gopherCounts(text: Column, stops: Seq[String]): Column =
+    GraftSql.toColumn(new GopherCounts(GraftSql.toExpression(text), stops))
+  def hasAsciiDigit(text: Column): Column =
+    GraftSql.toColumn(HasAsciiDigit(GraftSql.toExpression(text)))
   def fingerprint(tokens: Column): Column =
     GraftSql.toColumn(RollingFingerprint(GraftSql.toExpression(tokens.cast("array<int>"))))
   def nonEmptySplitCount(text: Column, regex: String): Column =

@@ -31,6 +31,23 @@ object SchemaLoader {
   /** Drop all loader hooks and loaded (non-bundled) documents — test hygiene. */
   def reset(): Unit = { loaders.clear(); docs.clear(); httpLoaderEnabled.set(false) }
 
+  /** Largest schema document the HTTP loader reads: a body declared or
+    * found to be longer is an unresolved ref, read no further than one byte
+    * past this bound. */
+  private[graft] val HttpMaxBytes: Int = 8 << 20
+  /** Redirects the HTTP loader follows for one URI before it gives up. */
+  private[graft] val HttpMaxRedirects = 5
+
+  private def scheme(u: java.net.URI): Option[String] = Option(u.getScheme).map(_.toLowerCase)
+
+  /** Whether the HTTP loader follows a redirect from `from` to `to`: the
+    * target's scheme must be allowed and, as under the JDK's
+    * `Redirect.NORMAL`, an https document never redirects to plain http. */
+  private[graft] def followsRedirect(from: java.net.URI, to: java.net.URI,
+                                     allowedSchemes: Set[String]): Boolean =
+    scheme(to).exists(allowedSchemes.contains) &&
+      !(scheme(from).contains("https") && scheme(to).contains("http"))
+
   /** Register the network `$ref` fetcher — the analogue of the reference's
     * default URL loader (`pkg/types/schema/schema.go:1045-1052`: the loader
     * receives the absolute retrieval URI and returns the document text; a
@@ -39,29 +56,45 @@ object SchemaLoader {
     * not reach the network by default — a 1000-executor job resolving refs
     * mid-flight would hammer whatever host the schema names. Production use
     * should pre-[[register]] documents or front this with a catalog;
-    * `allowedSchemes` keeps surprise `file:`/`jar:` URIs out. */
+    * `allowedSchemes` keeps surprise `file:`/`jar:` URIs out, redirect
+    * targets included, and an https ref is never redirected to http. A body over [[HttpMaxBytes]] or a chain of more than
+    * [[HttpMaxRedirects]] redirects is an unresolved ref. */
   def enableHttpLoader(timeoutMs: Int = 5000,
                        allowedSchemes: Set[String] = Set("http", "https")): Unit = {
+    import scala.jdk.OptionConverters._
     // idempotent: a second enable (two components both opting in) must not
     // stack loader closures — that would fetch every unresolvable URI once
     // per registration and leak an HttpClient selector thread per call
     if (!httpLoaderEnabled.compareAndSet(false, true)) return
     val client = java.net.http.HttpClient.newBuilder()
       .connectTimeout(java.time.Duration.ofMillis(timeoutMs.toLong))
-      .followRedirects(java.net.http.HttpClient.Redirect.NORMAL)
+      .followRedirects(java.net.http.HttpClient.Redirect.NEVER)
       .build()
+    def fetch(u: java.net.URI, redirectsLeft: Int): Option[String] = {
+      val req = java.net.http.HttpRequest.newBuilder(u)
+        .timeout(java.time.Duration.ofMillis(timeoutMs.toLong)).GET().build()
+      val resp = client.send(req, java.net.http.HttpResponse.BodyHandlers.ofInputStream())
+      val body = resp.body()
+      try resp.statusCode() / 100 match {
+        case 2 =>
+          val declared = resp.headers().firstValueAsLong("Content-Length").orElse(0L)
+          val bytes = if (declared > HttpMaxBytes) Array.emptyByteArray
+            else body.readNBytes(HttpMaxBytes + 1)
+          if (declared > HttpMaxBytes || bytes.length > HttpMaxBytes) None
+          else Some(new String(bytes, java.nio.charset.StandardCharsets.UTF_8))
+        case 3 if redirectsLeft > 0 =>
+          resp.headers().firstValue("Location").toScala
+            .map(u.resolve).filter(followsRedirect(u, _, allowedSchemes))
+            .flatMap(fetch(_, redirectsLeft - 1))
+        case _ => None
+      } finally body.close() // an unread remainder is dropped with the connection
+    }
     addLoader { uri =>
-      val scheme =
-        try Option(new java.net.URI(uri).getScheme).map(_.toLowerCase)
-        catch { case _: java.net.URISyntaxException => None }
-      if (!scheme.exists(allowedSchemes.contains)) None
-      else try {
-        val req = java.net.http.HttpRequest.newBuilder(java.net.URI.create(uri))
-          .timeout(java.time.Duration.ofMillis(timeoutMs.toLong)).GET().build()
-        val resp = client.send(req,
-          java.net.http.HttpResponse.BodyHandlers.ofString())
-        if (resp.statusCode() / 100 == 2) Some(resp.body()) else None
+      try {
+        val u = new java.net.URI(uri)
+        if (scheme(u).exists(allowedSchemes.contains)) fetch(u, HttpMaxRedirects) else None
       } catch {
+        case _: java.net.URISyntaxException | _: IllegalArgumentException => None
         case _: java.io.IOException => None
         case _: InterruptedException =>
           // preserve the cancellation signal — swallowing it would turn a

@@ -212,21 +212,6 @@ object SchemaParser {
 
   def parse(jsonText: String): SchemaDoc = parseJValue(JsonMethods.parse(jsonText))
 
-  /** Driver-side parsed-schema memo — the analogue of the reference's schema
-    * cache (`internal/schemacache/schemacache.go:16-73`, concurrent variant
-    * :45-73). Parsing is pure, so the cache is just a concurrent map keyed by
-    * the schema text. */
-  // bounded: a standing service parsing many distinct (e.g. per-snapshot
-  // inferred) schema texts must not retain every one for the JVM lifetime —
-  // on overflow the whole memo is dropped (parses are cheap relative to the
-  // compile they front; a real LRU is not worth the locking here)
-  private val ParseMemoMax = 1024
-  private val parseMemo = scala.collection.concurrent.TrieMap.empty[String, SchemaDoc]
-  def parseCached(jsonText: String): SchemaDoc = {
-    if (parseMemo.size > ParseMemoMax) parseMemo.clear()
-    parseMemo.getOrElseUpdate(jsonText, parse(jsonText))
-  }
-
   def parseJValue(raw: JValue): SchemaDoc = parseJValue(raw, "")
 
   /** Parse with a retrieval base URI (the URI the document was loaded from,

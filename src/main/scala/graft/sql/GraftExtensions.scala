@@ -141,13 +141,7 @@ object GraftFunctions {
         "graft_pii_redact(text) - replace email/card/ssn/phone/ipv4 matches with <CATEGORY> placeholders"),
       (args: Seq[Expression]) => {
         arity("graft_pii_redact", args, 1, 1)
-        graft.table.TextAnalysis.piiPatterns.foldLeft(asString(args.head): Expression) {
-          case (acc, (cat, pat)) =>
-            org.apache.spark.sql.catalyst.expressions.RegExpReplace(acc,
-              Literal(org.apache.spark.unsafe.types.UTF8String.fromString(pat), StringType),
-              Literal(org.apache.spark.unsafe.types.UTF8String.fromString(s"<${cat.toUpperCase}>"),
-                StringType))
-        }
+        graft.table.TextAnalysis.piiRedact(asString(args.head))
       }))
 
   /** Register onto a live session (no spark.sql.extensions conf needed). */

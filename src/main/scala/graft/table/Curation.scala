@@ -23,7 +23,11 @@ import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructFiel
   * codegen'd projections/filters that fuse into the scan; the dedup stages
   * keep their individual disciplines (payload-free candidate shuffles,
   * capped posting buffers, edge-list-sized clustering); decontamination
-  * broadcasts the benchmark shingle set, never shuffling the corpus. Each
+  * broadcasts the benchmark shingle set, never shuffling the corpus. The
+  * text is tokenized once per row: the internal `_toks` column (ascii tokens
+  * of the final, line-deduplicated text) is added before the first persist
+  * and rides every cached stage into fuzzy dedup, decontamination and DSIR,
+  * and is dropped from the curated output. Each
   * counted stage is persisted before its count so the report costs one
   * materialization per boundary, not a re-execution of the prefix — on a
   * real cluster each boundary would be a checkpointed snapshot table
@@ -64,17 +68,17 @@ object Curation {
         minWords = minWords, minStopwordHits = minStopwordHits)
       .filter(col("keep")).drop(flagCols: _*)
     // optional in-doc line cleanup BEFORE dedup: a zero-shuffle projection
-    // rewriting textCol, so downstream content hashes see the cleaned page
+    // rewriting textCol, so downstream content hashes see the cleaned page;
+    // then `_toks`, once per row, into the cache every later stage reads
     val s2 = lineDedupMinLen.map { ml =>
       s2pre.withColumn(textCol, array_join(
         TextAnalysis.dedupDocLines(split(col(textCol), "\n"), ml), "\n"))
     }.getOrElse(s2pre)
+      .withColumn("_toks", graft.expr.TextExprs.asciiTokens(col(textCol)))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val s3 = Dedup.dropExactDuplicates(s2, idCol, textCol)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val toks = graft.expr.TextExprs.asciiTokens(col(textCol))
-    val s4 = Dedup.dropFuzzyDuplicates(s3.withColumn("_toks", toks),
-        idCol, "_toks", minJaccard)
+    val s4 = Dedup.dropFuzzyDuplicates(s3, idCol, "_toks", minJaccard)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val s5 = Decontamination.decontaminate(s4,
         bench.withColumn("_toks", graft.expr.TextExprs.asciiTokens(col(textCol))),

@@ -1,6 +1,8 @@
 package graft.table
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, GraftSql}
+import org.apache.spark.sql.catalyst.expressions.{Contains, Expression, If, KnownNotNull, Literal, Not, RegExpReplace, RuntimeReplaceable}
+import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.functions._
 
 /** Text-analysis operators over the `documents` table: language ID, quality
@@ -111,15 +113,26 @@ object TextAnalysis {
     "phone" -> "\\b\\d{3}[-.]\\d{3}[-.]\\d{4}\\b",
     "ipv4" -> "\\b(?:\\d{1,3}\\.){3}\\d{1,3}\\b")
 
+  /** The guard of a [[piiPatterns]] category: false when the text cannot
+    * hold a match, since every email match contains `@` and every other
+    * pattern needs an ASCII digit (`\\d` is `[0-9]` in Java regex and RE2).
+    * Null for a null text, so a guarded count or redaction keeps its null. */
+  private def piiPossible(cat: String, text: Expression): Expression =
+    if (cat == "email") Contains(text, Literal("@")) else graft.expr.HasAsciiDigit(text)
+
   /** Per-document PII hit counts (one column per [[piiPatterns]] category,
     * `<cat>_hits`) plus `pii_total` and `has_pii` — the scan pass a
-    * redaction/quarantine pipeline stage gates on. Pure codegen'd
-    * `regexp_extract_all` arithmetic; no UDF, no shuffle. */
+    * redaction/quarantine pipeline stage gates on. Each category's
+    * codegen'd `regexp_extract_all` count runs only on texts holding its
+    * literal (`@`, or an ASCII digit); on the rest the count is 0 without a
+    * regex pass. No UDF, no shuffle. */
   def piiScan(df: DataFrame, textCol: String): DataFrame = {
     val t = col(textCol)
+    def possible(cat: String) = GraftSql.toColumn(piiPossible(cat, GraftSql.toExpression(t)))
     val withCounts = piiPatterns.foldLeft(df) { case (acc, (cat, pat)) =>
       acc.withColumn(s"${cat}_hits",
-        size(regexp_extract_all(t, lit(pat), lit(0))).cast("long"))
+        when(!possible(cat), lit(0L))
+          .otherwise(size(regexp_extract_all(t, lit(pat), lit(0))).cast("long")))
     }
     val total = piiPatterns.map(p => col(s"${p._1}_hits"))
       .reduce(_ + _)
@@ -128,20 +141,40 @@ object TextAnalysis {
   }
 
   /** PII redaction: every [[piiPatterns]] match replaced by its
-    * `<CATEGORY>` placeholder, applied most-specific-first. Chained
-    * codegen'd `regexp_replace` (replaces ALL occurrences) — the transform
-    * stage paired with [[piiScan]]. */
+    * `<CATEGORY>` placeholder, applied most-specific-first with
+    * `regexp_replace` (replaces ALL occurrences) — the transform stage
+    * paired with [[piiScan]]. The email pass runs only on texts holding `@`
+    * and the four digit passes only on texts holding an ASCII digit; the
+    * placeholders hold neither, so the output equals the unguarded chain
+    * byte for byte. A nondeterministic text runs the unguarded chain. */
   def piiRedact(textCol: Column): Column =
-    piiPatterns.foldLeft(textCol) { case (acc, (cat, pat)) =>
-      regexp_replace(acc, lit(pat), lit(s"<${cat.toUpperCase}>"))
-    }
+    GraftSql.toColumn(piiRedact(GraftSql.toExpression(textCol.cast("string"))))
+
+  /** [[piiRedact]] over a Catalyst expression (the SQL `graft_pii_redact`). */
+  def piiRedact(text: Expression): Expression = PiiRedact(text)
+
+  private[table] def redactChain(text: Expression): Expression = {
+    def redact(acc: Expression, p: (String, String)): Expression =
+      RegExpReplace(acc, Literal(p._2), Literal(s"<${p._1.toUpperCase}>"))
+    // the email pass, then the digit passes; a group shares one guard
+    def guarded(acc: Expression, group: Seq[(String, String)]): Expression =
+      If(Not(piiPossible(group.head._1, text)), acc, group.foldLeft(acc)(redact))
+    val (email, digits) = piiPatterns.span(_._1 == "email")
+    // a guard evaluates the text apart from the chain, so a nondeterministic
+    // text could be guarded as one string and redacted as another
+    if (text.deterministic) guarded(guarded(text, email), digits)
+    else piiPatterns.foldLeft(text)(redact)
+  }
 
   /** Gopher-style (Rae et al. 2021, §A1.1) + C4 (Raffel et al. 2020, §2.2)
     * document-quality rules as one flag projection: word-count bounds, mean
     * word length bounds, minimum stopword evidence, and a symbol-to-word
     * ratio cap, plus the conjunction `keep`. Word splitting matches the
-    * corpus convention (single-space tokens); mean word length assumes
-    * single-space separation, `(n_chars − (n_words − 1)) / n_words`.
+    * corpus convention (single-space tokens, empty pieces kept); mean word
+    * length assumes single-space separation, `(n_chars − (n_words − 1)) /
+    * n_words`. The four counts come from one native byte scan per row
+    * ([[graft.expr.GopherCounts]]), equal to `size(split(t, " "))`,
+    * `length(t)`, [[stopwordHits]] and the `[#…]|\.\.\.` match count.
     * Zero-shuffle, fully codegen'd — at 10^12 docs this is a pure map stage
     * that fuses into the scan. */
   def gopherQualityFlags(df: DataFrame, textCol: String,
@@ -150,23 +183,31 @@ object TextAnalysis {
                          maxMeanWordLen: Double = 10.0,
                          minStopwordHits: Int = 2,
                          maxSymbolRatio: Double = 0.1): DataFrame = {
-    val t = col(textCol)
-    val nWords = size(split(t, " "))
-    val meanLen = (length(t) - (nWords - 1)).cast("double") / nWords.cast("double")
     // Gopher's stopword rule: ≥2 of a fixed tiny list ("the","be","to","of",
     // "and","that","have","with") — evidence of running prose
     val gopherStops = Seq("the", "be", "to", "of", "and", "that", "have", "with")
-    val symbolHits = size(regexp_extract_all(t, lit("[#…]|\\.\\.\\."), lit(0)))
-    df.withColumn("n_words", nWords)
+    // the nondeterministic no-op guard (Dedup.jaccardPairs) keeps the scan in
+    // one projection: without it a `keep` filter inlines the counts into its
+    // condition once per reference. The guard always holds, so KnownNotNull
+    // restores the nullability the counts have without it.
+    val counts = "_gopher_counts"
+    val scan = graft.expr.TextExprs.gopherCounts(col(textCol), gopherStops)
+    val guarded = GraftSql.toColumn(KnownNotNull(GraftSql.toExpression(
+      when(spark_partition_id() >= 0, scan))))
+    val nWords = col(s"$counts.n_words")
+    val meanLen = (col(s"$counts.n_chars") - (nWords - 1)).cast("double") / nWords.cast("double")
+    df.withColumn(counts, guarded)
+      .withColumn("n_words", nWords)
       .withColumn("mean_word_len", meanLen)
       .withColumn("ok_word_count", nWords.between(minWords, maxWords))
       .withColumn("ok_mean_word_len", meanLen.between(minMeanWordLen, maxMeanWordLen))
-      .withColumn("ok_stopwords", stopwordHits(t, gopherStops) >= minStopwordHits)
+      .withColumn("ok_stopwords", col(s"$counts.stop_hits") >= minStopwordHits)
       .withColumn("ok_symbol_ratio",
-        symbolHits.cast("double") / nWords.cast("double") <= maxSymbolRatio)
+        col(s"$counts.symbol_hits").cast("double") / nWords.cast("double") <= maxSymbolRatio)
       .withColumn("keep",
         col("ok_word_count") && col("ok_mean_word_len") &&
           col("ok_stopwords") && col("ok_symbol_ratio"))
+      .drop(counts)
   }
 
   /** CORPUS-level hot-n-gram coverage: for every document, the fraction of
@@ -406,4 +447,14 @@ object TextAnalysis {
     }
     weights.filter(col("w_scaled") >= thresh)
   }
+}
+
+/** [[TextAnalysis.piiRedact]] as one expression, replaced by the regex chain
+  * once its text is resolved: only then does Catalyst know whether the text
+  * is deterministic (a Column's `rand()` is an unresolved function until
+  * analysis). */
+private[table] case class PiiRedact(child: Expression)
+    extends RuntimeReplaceable with UnaryLike[Expression] {
+  override lazy val replacement: Expression = TextAnalysis.redactChain(child)
+  override protected def withNewChildInternal(c: Expression): PiiRedact = copy(child = c)
 }

@@ -191,13 +191,83 @@ class NonAsciiTokenSpec extends SparkSpec {
         graft.expr.DsirExprs.bigramLogSum(col("toks"),
           Array.fill(64)(7L), 64).as("w"),
         graft.expr.TextExprs.sanitizeTokens(col("toks"), 5, 0).as("san"),
-        graft.expr.TextExprs.oovCount(col("toks"), 5).as("oov"))
+        graft.expr.TextExprs.oovCount(col("toks"), 5).as("oov"),
+        graft.expr.TextExprs.gopherCounts(lit("the cat… sat ... 42"), Seq("the")).as("gc"),
+        graft.expr.TextExprs.hasAsciiDigit(lit("the cat… sat ... 42")).as("digit"))
         .collect()
       assert(out.head.getInt(1) == 0 && out.head.getLong(3) == 14L)
       assert(out.head.getSeq[Int](4) == Seq(3, 4, 0) && out.head.getInt(5) == 1)
+      assert(out.head.getStruct(6).toSeq == Seq(5, 19, 1, 2) && out.head.getBoolean(7))
+      // and over a nullable text with a null row, through the guarded projection
+      val texts = Seq(Some("the of and ... #"), None).toDF("text")
+      val flags = graft.table.TextAnalysis.gopherQualityFlags(texts, "text",
+          minWords = 1, minMeanWordLen = 0.0, minStopwordHits = 1, maxSymbolRatio = 1.0)
+        .select("n_words", "keep").collect()
+      assert(flags(0).getInt(0) == 5 && flags(0).getBoolean(1))
+      // null under ANSI, size(null) = -1 under legacySizeOfNull: never kept
+      assert(flags(1).isNullAt(1) || !flags(1).getBoolean(1))
+      val pii = Seq(Some("a@b.co 555-867-5309"), Some("plain"), None).toDF("text")
+        .select(graft.table.TextAnalysis.piiRedact(col("text"))).collect().map(_.getString(0))
+      assert(pii.toSeq == Seq("<EMAIL> <PHONE>", "plain", null))
     } finally prev match {
       case Some(v) => spark.conf.set("spark.sql.codegen.factoryMode", v)
       case None => spark.conf.unset("spark.sql.codegen.factoryMode")
+    }
+  }
+}
+
+/** Plan shapes of the curate path's text work: each per-document function
+  * runs once per row. */
+class CuratePlanSpec extends SparkSpec {
+  import spark.implicits._
+  import org.apache.spark.sql.catalyst.expressions.Expression
+  import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+
+  /** The expressions of `plan` above any cached relation: an
+    * InMemoryRelation is a leaf, so its cached plan is not visited. */
+  private def aboveCache(plan: LogicalPlan): Seq[Expression] =
+    plan.collect { case n => n.expressions }.flatten.flatMap(_.collect { case e => e })
+
+  test("the keep filter over gopherQualityFlags runs one native count scan, no split or regex") {
+    // not a local relation, which the optimizer would evaluate away
+    val df = spark.range(4).select(col("id"),
+      concat(lit("the cat sat on the mat ... # "), col("id").cast("string")).as("text"))
+    val plan = graft.table.TextAnalysis.gopherQualityFlags(df, "text")
+      .filter(col("keep")).queryExecution.optimizedPlan
+    val str = plan.toString
+    assert(!str.contains("split("), str)
+    assert(!str.contains("regexp_extract_all("), str)
+    assert(aboveCache(plan).count(_.isInstanceOf[graft.expr.GopherCounts]) === 1, str)
+  }
+
+  test("curate tokenizes once: the fuzzy-dedup plans read _toks from the cached stage") {
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = seen.add(qe)
+      def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    val good = ("the of and " * 12 + "alpha beta gamma delta " * 5).trim
+    val docs = Seq((1L, good, "en"), (2L, good, "en"), (3L, good + " extra", "en"),
+        (4L, (good + " ") * 2, "en"))
+      .toDF("doc_id", "text", "lang")
+    val bench = Seq((9L, "zzz yyy xxx www vvv", "en")).toDF("doc_id", "text", "lang")
+    spark.listenerManager.register(listener)
+    try {
+      graft.table.Curation.curate(docs, "doc_id", "text", "lang", bench,
+        keepLangs = Seq("en"), minWords = 20)
+      // events arrive in order: once the sentinel's is in, curate's all are
+      spark.range(1).selectExpr("'curate-plan-sentinel' AS s").collect()
+      val deadline = System.nanoTime() + 60L * 1000000000L
+      while (!seen.toArray.exists(_.toString.contains("curate-plan-sentinel")) &&
+             System.nanoTime() < deadline) Thread.sleep(50)
+    } finally spark.listenerManager.unregister(listener)
+    val fuzzy = seen.toArray.toSeq.map(_.asInstanceOf[QueryExecution].optimizedPlan)
+      .filter(p => aboveCache(p).exists(_.isInstanceOf[graft.expr.MinHashSignature]))
+    assert(fuzzy.nonEmpty, "no fuzzy-dedup plan observed")
+    fuzzy.foreach { p =>
+      assert(aboveCache(p).count(_.isInstanceOf[graft.expr.AsciiTokens]) === 0, p.toString)
     }
   }
 }

@@ -197,6 +197,87 @@ class RefResolutionSpec extends SparkSpec with BeforeAndAfterEach {
     } finally server.stop(0)
   }
 
+  test("the HTTP loader leaves an oversized body or a redirect loop unresolved") {
+    val server = com.sun.net.httpserver.HttpServer.create(
+      new java.net.InetSocketAddress("127.0.0.1", 0), 0)
+    val schemaBytes = """{"type": "integer", "minimum": 0}""".getBytes("UTF-8")
+    server.createContext("/score.json",
+      (ex: com.sun.net.httpserver.HttpExchange) => {
+        ex.sendResponseHeaders(200, schemaBytes.length.toLong)
+        ex.getResponseBody.write(schemaBytes); ex.close()
+      })
+    // a valid schema padded with whitespace to 4x the cap, streamed with no
+    // Content-Length: only the loader hanging up stops the stream early
+    val sent = new java.util.concurrent.atomic.AtomicLong()
+    val padded = 4L * SchemaLoader.HttpMaxBytes
+    server.createContext("/big.json",
+      (ex: com.sun.net.httpserver.HttpExchange) => {
+        ex.sendResponseHeaders(200, 0)
+        val out = ex.getResponseBody
+        val pad = Array.fill[Byte](64 << 10)(' ')
+        try {
+          out.write(schemaBytes, 0, schemaBytes.length - 1)
+          while (sent.get < padded) { out.write(pad); sent.addAndGet(pad.length) }
+          out.write('}')
+        } catch { case _: java.io.IOException => () } // the loader hung up
+        finally ex.close()
+      })
+    // a declared length past the cap is refused from the headers
+    server.createContext("/declared.json",
+      (ex: com.sun.net.httpserver.HttpExchange) => {
+        try {
+          ex.sendResponseHeaders(200, SchemaLoader.HttpMaxBytes + 1L)
+          ex.getResponseBody.write(new Array[Byte](SchemaLoader.HttpMaxBytes + 1))
+        } catch { case _: java.io.IOException => () }
+        finally ex.close()
+      })
+    val loopHits = new java.util.concurrent.atomic.AtomicInteger()
+    server.createContext("/loop.json",
+      (ex: com.sun.net.httpserver.HttpExchange) => {
+        loopHits.incrementAndGet()
+        ex.getResponseHeaders.add("Location", "/loop.json")
+        ex.sendResponseHeaders(302, -1); ex.close()
+      })
+    server.createContext("/hop.json",
+      (ex: com.sun.net.httpserver.HttpExchange) => {
+        ex.getResponseHeaders.add("Location", "/score.json")
+        ex.sendResponseHeaders(302, -1); ex.close()
+      })
+    server.start()
+    try {
+      SchemaLoader.enableHttpLoader()
+      def refTo(path: String) =
+        s"""{"type": "object", "properties": {"score":
+            {"$$ref": "http://127.0.0.1:${server.getAddress.getPort}$path"}}}"""
+      def unresolved(path: String): Unit = {
+        val e = intercept[IllegalArgumentException](violationsOf(refTo(path)))
+        assert(e.getMessage.contains("no registered loader"), path)
+      }
+      // a redirect within the cap is still followed
+      assert(violationsOf(refTo("/hop.json")) == Map("minimum" -> 1L))
+      unresolved("/big.json")
+      assert(sent.get < padded, "the loader read the oversized body to its end")
+      unresolved("/declared.json")
+      unresolved("/loop.json")
+      assert(loopHits.get % (SchemaLoader.HttpMaxRedirects + 1) == 0 && loopHits.get > 0,
+        s"${loopHits.get} requests to the redirect loop")
+    } finally server.stop(0)
+  }
+
+  test("the HTTP loader never follows an https redirect to http") {
+    def follows(from: String, to: String, schemes: Set[String] = Set("http", "https")) =
+      SchemaLoader.followsRedirect(new java.net.URI(from), new java.net.URI(to), schemes)
+    assert(!follows("https://a.example/s.json", "http://a.example/s.json"))
+    assert(!follows("HTTPS://a.example/s.json", "HTTP://b.example/s.json"))
+    assert(follows("https://a.example/s.json", "https://b.example/s.json"))
+    assert(follows("http://a.example/s.json", "https://a.example/s.json"))
+    assert(follows("http://a.example/s.json", "http://b.example/s.json"))
+    // the target's scheme must be allowed
+    assert(!follows("http://a.example/s.json", "https://a.example/s.json", Set("http")))
+    assert(!follows("https://a.example/s.json", "file:///etc/passwd"))
+    assert(!follows("http://a.example/s.json", "/relative/s.json"))
+  }
+
   test("unresolvable remote ref without a loader errors like the reference") {
     val schema =
       """{"type": "object",
